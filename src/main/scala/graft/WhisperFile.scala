@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.format.WhisperCodec.{ArchiveMeta, FileMeta}
 import graft.meta.WhisperMeta
+import graft.sources.whisper.WhisperIO
 
 /**
  * User-facing facade mirroring the reference's object model
@@ -20,15 +21,21 @@ import graft.meta.WhisperMeta
  *
  * Unlike the reference, `read` touches only headers — point data stays on
  * executors, materialized lazily per query (`README.md:64`'s whole-file
- * eager read does not scale; this does).
+ * eager read does not scale; this does). A `.gz` file is opened header-only
+ * too: only [[meta]]'s decompressed `fileSizeActual` needs the whole stream.
  */
-final class WhisperFile private (val spark: SparkSession, val path: String, val meta: FileMeta) {
+final class WhisperFile private (val spark: SparkSession, val path: String, header: FileMeta) {
+
+  /** File metadata (`WhisperFileMeta`). For `.gz` its decompressed
+   * `fileSizeActual` (`test_whisper_pandas.py:91-97`) streams the whole file
+   * once, on first use; the header-only open reports it as -1. */
+  lazy val meta: FileMeta = if (header.fileSizeActual >= 0) header else WhisperMeta.read(path)
 
   /** One lazy view per archive tier (`whisper_pandas.py:277-282`). */
-  def archives: Seq[WhisperArchive] = meta.archives.map(a => new WhisperArchive(this, a))
+  def archives: Seq[WhisperArchive] = header.archives.map(a => new WhisperArchive(this, a))
 
   def archive(i: Int): WhisperArchive = {
-    require(i >= 0 && i < meta.archives.size, s"archive $i out of range 0..${meta.archives.size - 1}")
+    require(i >= 0 && i < header.archives.size, s"archive $i out of range 0..${header.archives.size - 1}")
     archives(i)
   }
 
@@ -57,9 +64,10 @@ final class WhisperFile private (val spark: SparkSession, val path: String, val 
 }
 
 object WhisperFile {
-  /** Header-only open (`WhisperFile.read`, `whisper_pandas.py:244-275`). */
+  /** Header-only open (`WhisperFile.read`, `whisper_pandas.py:244-275`),
+   * gzip-aware by suffix (`whisper_pandas.py:257-261`). */
   def read(spark: SparkSession, path: String): WhisperFile =
-    new WhisperFile(spark, path, WhisperMeta.read(path))
+    new WhisperFile(spark, path, WhisperIO.readMetaHeaderOnly(path, path.endsWith(".gz")))
 }
 
 /** One retention tier (`WhisperArchive`, `whisper_pandas.py:171-234`). */

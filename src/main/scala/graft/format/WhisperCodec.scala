@@ -1,7 +1,8 @@
 package graft.format
 
 import java.io.{DataInputStream, EOFException, InputStream}
-import java.nio.ByteBuffer
+import java.lang.invoke.MethodHandles
+import java.nio.{ByteBuffer, ByteOrder}
 
 /**
  * Pure-JVM codec for the Graphite WhisperDB binary format.
@@ -136,24 +137,40 @@ object WhisperCodec {
    * (`whisper_pandas.py:202`). */
   final case class Point(position: Long, timestamp: Long, value: Double)
 
+  /** Per-point callback on primitives. A lambda literal `(pos, ts, v) => ...`
+   * converts to it, and the call passes `(Long, Long, Double)` unboxed, where
+   * a `Function3` would box all three per point. */
+  trait PointFn {
+    def apply(position: Long, timestamp: Long, value: Double): Unit
+  }
+
+  private val IntView = MethodHandles.byteArrayViewVarHandle(classOf[Array[Int]], ByteOrder.BIG_ENDIAN)
+  private val DoubleView = MethodHandles.byteArrayViewVarHandle(classOf[Array[Double]], ByteOrder.BIG_ENDIAN)
+
+  /** Unsigned timestamp of the point record starting at byte `off` of `buf`. */
+  def timestampAt(buf: Array[Byte], off: Int): Long =
+    (IntView.get(buf, off): Int).toLong & 0xffffffffL
+
+  /** Value of the point record starting at byte `off` of `buf`. */
+  def valueAt(buf: Array[Byte], off: Int): Double = DoubleView.get(buf, off + 4): Double
+
   /**
    * Decode `count` 12-byte points from `buf` starting at `bufOffset`, assigning
    * ring positions `posStart until posStart+count`. Zero-allocation-per-point
-   * callback form used by the connector's PartitionReader.
+   * callback form.
    */
   def foreachPoint(
       buf: Array[Byte],
       bufOffset: Int,
       count: Int,
       posStart: Long
-  )(f: (Long, Long, Double) => Unit): Unit = {
-    val bb = ByteBuffer.wrap(buf, bufOffset, count * PointSize)
+  )(f: PointFn): Unit = {
     var i = 0
+    var off = bufOffset
     while (i < count) {
-      val ts = u32(bb)
-      val v = bb.getDouble()
-      f(posStart + i, ts, v)
+      f(posStart + i, timestampAt(buf, off), valueAt(buf, off))
       i += 1
+      off += PointSize
     }
   }
 
@@ -173,7 +190,7 @@ object WhisperCodec {
    * (positioned at the archive offset), tolerating EOF (truncated files must
    * degrade cleanly, `test_whisper_pandas.py:100-103`). Returns number decoded.
    */
-  def streamPoints(in: DataInputStream, points: Long)(f: (Long, Long, Double) => Unit): Long = {
+  def streamPoints(in: DataInputStream, points: Long)(f: PointFn): Long = {
     var i = 0L
     try {
       while (i < points) {

@@ -37,7 +37,13 @@ import graft.format.WhisperCodec
  *  - `timeSort=true` restores chronological order WITHOUT a shuffle: a
  *    well-formed ring buffer is at most 2 ascending runs
  *    (`whisper_pandas.py:231-232` does a full pandas sort instead), so the
- *    reader emits the rotation; a full per-partition sort is only a fallback.
+ *    reader emits the rotation; a full per-partition sort is only a fallback;
+ *  - decode works on the read buffer in place (like the reference's
+ *    `np.frombuffer` view, `whisper_pandas.py:178-184`): one pass keeps the
+ *    indices of surviving records, and column vectors fill straight from the
+ *    records, so a partition holds its 12-byte records plus 4 B per kept row
+ *    (nothing extra when every record is kept). Gzip partitions hold only
+ *    the kept records, copied out of a bounded stream chunk.
  */
 final case class WhisperInputPartition(
     filePath: String,
@@ -71,13 +77,8 @@ sealed trait WPred extends Serializable {
   def eval(file: String, archive: Int, pos: Long, ts: Long, value: Double): Boolean
 }
 final case class NumCmp(col: String, op: String, v: Long) extends WPred {
-  private def pick(archive: Int, pos: Long, ts: Long): Long = col match {
-    case "archive"  => archive.toLong
-    case "position" => pos
-    case _          => ts
-  }
   def eval(file: String, archive: Int, pos: Long, ts: Long, value: Double): Boolean = {
-    val x = pick(archive, pos, ts)
+    val x = WPred.numeric(col, archive, pos, ts)
     op match {
       case "="  => x == v
       case "!=" => x != v
@@ -89,14 +90,8 @@ final case class NumCmp(col: String, op: String, v: Long) extends WPred {
   }
 }
 final case class NumIn(col: String, vs: Set[Long]) extends WPred {
-  def eval(file: String, archive: Int, pos: Long, ts: Long, value: Double): Boolean = {
-    val x = col match {
-      case "archive"  => archive.toLong
-      case "position" => pos
-      case _          => ts
-    }
-    vs.contains(x)
-  }
+  def eval(file: String, archive: Int, pos: Long, ts: Long, value: Double): Boolean =
+    vs.contains(WPred.numeric(col, archive, pos, ts))
 }
 /** Trivially-true marker for filters we accept without reader-side work
  * (IsNotNull on an all-non-nullable schema); stripped before the decode loop. */
@@ -114,6 +109,23 @@ final case class FileIn(vs: Set[String]) extends WPred {
 }
 
 object WPred {
+  /** The value a numeric predicate on `col` compares. "timestamp32" is the
+   * INT timestamp column (toDatetime=false): it holds the u32 seconds as a
+   * signed int, so seconds past 2^31 read as negative there. */
+  def numeric(col: String, archive: Int, pos: Long, ts: Long): Long = col match {
+    case "archive"     => archive.toLong
+    case "position"    => pos
+    case "timestamp32" => ts.toInt.toLong
+    case _             => ts
+  }
+
+  /** Predicates on `archive` or `file`: constant over a scan unit, so they
+   * decide whole partitions (at plan time, and once per partition read). */
+  def partitionLevel(p: WPred): Boolean = p match {
+    case NumCmp("archive", _, _) | NumIn("archive", _) | FileCmp(_, _) | FileIn(_) => true
+    case _                                                                       => false
+  }
+
   /** Convert timestamp-typed filter values to whole epoch seconds; None when
    * the value has sub-second precision (then we refuse the pushdown and Spark
    * evaluates the original filter itself — never wrong, only slower). */
@@ -134,9 +146,9 @@ object WPred {
     case _         => None
   }
 
-  private def cmp(col: String, op: String, v: Any): Option[WPred] = col match {
+  private def cmp(col: String, op: String, v: Any, toDatetime: Boolean): Option[WPred] = col match {
     case "archive" | "position" => num(v).map(NumCmp(col, op, _))
-    case "timestamp"            => epochSeconds(v).map(NumCmp(col, op, _))
+    case "timestamp"            => epochSeconds(v).map(NumCmp(timestampCol(toDatetime), op, _))
     // "value" filters are NOT pushed: Spark SQL's NaN ordering/equality
     // semantics differ from Java double comparisons, and a claimed-but-wrong
     // pushdown silently drops rows. Spark evaluates them itself.
@@ -149,19 +161,24 @@ object WPred {
     case _ => None
   }
 
-  /** Translate a V1 source filter; None = not supported, stays with Spark. */
-  def translate(f: Filter): Option[WPred] = f match {
-    case EqualTo(c, v)            => cmp(c, "=", v)
-    case GreaterThan(c, v)        => cmp(c, ">", v)
-    case GreaterThanOrEqual(c, v) => cmp(c, ">=", v)
-    case LessThan(c, v)           => cmp(c, "<", v)
-    case LessThanOrEqual(c, v)    => cmp(c, "<=", v)
-    case Not(EqualTo(c, v))       => cmp(c, "!=", v)
+  /** A pushed timestamp predicate compares in the column's own domain. */
+  private def timestampCol(toDatetime: Boolean): String = if (toDatetime) "timestamp" else "timestamp32"
+
+  /** Translate a V1 source filter; None = not supported, stays with Spark.
+   * `toDatetime` is the scan's option: it decides the timestamp column's type. */
+  def translate(f: Filter, toDatetime: Boolean): Option[WPred] = f match {
+    case EqualTo(c, v)            => cmp(c, "=", v, toDatetime)
+    case GreaterThan(c, v)        => cmp(c, ">", v, toDatetime)
+    case GreaterThanOrEqual(c, v) => cmp(c, ">=", v, toDatetime)
+    case LessThan(c, v)           => cmp(c, "<", v, toDatetime)
+    case LessThanOrEqual(c, v)    => cmp(c, "<=", v, toDatetime)
+    case Not(EqualTo(c, v))       => cmp(c, "!=", v, toDatetime)
     case In(c, vs) =>
       c match {
         case "archive" | "position" | "timestamp" =>
           val longs = vs.toSeq.map(v => if (c == "timestamp") epochSeconds(v) else num(v))
-          if (longs.forall(_.isDefined)) Some(NumIn(c, longs.flatten.toSet)) else None
+          val col = if (c == "timestamp") timestampCol(toDatetime) else c
+          if (longs.forall(_.isDefined)) Some(NumIn(col, longs.flatten.toSet)) else None
         case "file" =>
           val strs = vs.toSeq.collect { case s: String => s; case u: UTF8String => u.toString }
           if (strs.length == vs.length) Some(FileIn(strs.toSet)) else None
@@ -185,7 +202,7 @@ class WhisperScanBuilder(paths: Seq[WhisperIO.FileEntry], rawPatterns: Seq[Strin
   private var requiredSchema: StructType = options.schema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val translated = filters.map(f => f -> WPred.translate(f))
+    val translated = filters.map(f => f -> WPred.translate(f, options.toDatetime))
     pushed = translated.collect { case (f, Some(_)) => f }
     preds = translated.collect { case (_, Some(p)) if p != TruePred => p }.toSeq
     translated.collect { case (f, None) => f }
@@ -316,11 +333,7 @@ private[whisper] object WhisperPlanning {
 
   /** Plan-time pruning: archive/file predicates decide whole partitions. */
   def partitionSurvives(preds: Seq[WPred], file: String, archive: Int): Boolean =
-    preds.forall {
-      case p @ (NumCmp("archive", _, _) | NumIn("archive", _)) => p.eval(file, archive, 0, 0, 0)
-      case p @ (FileCmp(_, _) | FileIn(_))                     => p.eval(file, archive, 0, 0, 0)
-      case _                                                   => true
-    }
+    preds.forall(p => !WPred.partitionLevel(p) || p.eval(file, archive, 0, 0, 0))
 
   /** Default header source for batch planning: the manifest when the
    * `headerManifest` option names one AND its entry's length matches the
@@ -708,22 +721,47 @@ class WhisperSequentialReader[T](
   override def close(): Unit = if (cur != null) { cur.close(); cur = null }
 }
 
-/** Shared partition decode: byte-range read -> filtered primitive arrays +
- * emission order (ring rotation or sort fallback). */
+/** Shared partition decode: one pass over the read buffer that keeps the
+ * surviving records where they are and orders them without moving rows. */
 private[whisper] object WhisperDecode {
-  final case class Decoded(
-      positions: Array[Long],
-      timestamps: Array[Long],
-      values: Array[Double],
-      order: Array[Int],
-      nRows: Int
-  )
+  import WhisperCodec.{PointSize, timestampAt, valueAt}
+
+  /** One partition's kept rows over its record buffer. Emitted row `r` is
+   * the record at [[slot]]`(r)`: the rotation `rot` and the selection `sel`
+   * (null = every record, in buffer order) give the emission order. A
+   * record's ring position is `posBase` plus its relative index, which is
+   * the slot itself unless `relPos` (u32, null = slot) says otherwise. */
+  final class Decoded(
+      recs: Array[Byte],
+      posBase: Long,
+      relPos: Array[Int],
+      sel: Array[Int],
+      rot: Int,
+      val nRows: Int) {
+    def slot(r: Int): Int = {
+      var j = r + rot
+      if (j >= nRows) j -= nRows
+      if (sel == null) j else sel(j)
+    }
+    def position(slot: Int): Long =
+      posBase + (if (relPos == null) slot.toLong else relPos(slot) & 0xffffffffL)
+    def timestamp(slot: Int): Long = timestampAt(recs, slot * PointSize)
+    def value(slot: Int): Double = valueAt(recs, slot * PointSize)
+  }
+
+  private val Empty = new Decoded(Array.emptyByteArray, 0L, null, null, 0, 0)
+
+  /** The most records one gzip partition's compacted buffer holds. */
+  private val MaxGzipRows: Int = (Int.MaxValue - 8) / PointSize
 
   def load(
       part: WhisperInputPartition,
       options: WhisperOptions,
       preds: Seq[WPred],
       enforceWindows: Boolean = false): Decoded = {
+    // archive/file predicates are constant over the partition: decided once
+    if (!WhisperPlanning.partitionSurvives(preds, part.filePath, part.archiveIndex)) return Empty
+    val pass = new Pass(part, options, preds.filterNot(WPred.partitionLevel).toArray, enforceWindows)
     val p = new HPath(part.filePath)
     val fs = p.getFileSystem(WhisperIO.hadoopConf())
     val raw =
@@ -735,12 +773,11 @@ private[whisper] object WhisperDecode {
         // instead of failing a 100 TB query over one vanished metric. The
         // walk-based plan keeps failing loudly (its file list was just
         // observed, so FileNotFound there means something is truly wrong).
-        case _: java.io.FileNotFoundException if options.manifestListing =>
-          return Decoded(Array.empty, Array.empty, Array.empty, Array.empty, 0)
+        case _: java.io.FileNotFoundException if options.manifestListing => return Empty
       }
     try {
-      if (part.gzip) loadGzipStreaming(raw, part, options, preds, enforceWindows)
-      else loadRanged(raw, part, options, preds, enforceWindows)
+      if (part.gzip) loadGzipStreaming(raw, part, pass)
+      else loadRanged(raw, part, pass)
     } finally raw.close()
   }
 
@@ -759,16 +796,94 @@ private[whisper] object WhisperDecode {
           "written ring), so its chunks cannot be emitted pre-ordered for the global-sort " +
           "elision. Retry with option orderedSplit=false to scan it as one ordered partition.")
 
-  /** Plain files: one ranged read per split. The planner caps splits at
-   * maxPointsPerSplit / Int.MaxValue bytes, so the buffer always fits. */
+  /** One pass's row filter and bookkeeping. It applies dropTimeZero, the
+   * row-level pushed predicates and the window check; records each kept
+   * row's relative record index only once some record has been dropped
+   * (until then kept row j is record j); and counts the descents of the kept
+   * timestamps, from which [[decoded]] derives the emission order. */
+  private final class Pass(
+      part: WhisperInputPartition,
+      options: WhisperOptions,
+      preds: Array[WPred],
+      enforceWindows: Boolean) {
+    var kept = 0
+    private var idx: Array[Int] = null
+    private var descents = 0
+    private var descentAt = 0
+    private var firstTs = 0L
+    private var prevTs = 0L
+
+    def accepts(rel: Long, ts: Long, v: Double): Boolean = {
+      if (options.dropTimeZero && ts == 0L) return false
+      val pos = part.posStart + rel
+      var i = 0
+      while (i < preds.length) {
+        if (!preds(i).eval(part.filePath, part.archiveIndex, pos, ts, v)) return false
+        i += 1
+      }
+      if (enforceWindows) checkWindow(part, pos, ts)
+      true
+    }
+
+    /** Keeps the record at relative index `rel` (< 2^32) as the next row. */
+    def add(rel: Long, ts: Long): Unit = {
+      if (idx != null || rel != kept) {
+        if (idx == null) idx = Array.tabulate(grown)(identity)
+        else if (kept == idx.length) idx = java.util.Arrays.copyOf(idx, grown)
+        idx(kept) = rel.toInt
+      }
+      if (kept == 0) firstTs = ts
+      else if (ts < prevTs) { descents += 1; descentAt = kept }
+      prevTs = ts
+      kept += 1
+    }
+
+    private def grown: Int =
+      math.max(kept + 1, math.min(part.posCount, math.max(1024L, 2L * kept)).toInt)
+
+    /** The kept rows over `recs`. Plain reads keep records in place, so the
+     * kept indices select slots; gzip compacts kept records, so the indices
+     * are the slots' positions. With timeSort the order is the ring
+     * rotation (one descent, wrapping cleanly) or else a stable sort by
+     * unsigned timestamp. */
+    def decoded(recs: Array[Byte], compacted: Boolean): Decoded = {
+      val (relPos, sel) = if (compacted) (idx, null) else (null, idx)
+      if (!options.timeSort || descents == 0) new Decoded(recs, part.posStart, relPos, sel, 0, kept)
+      else if (descents == 1 && prevTs < firstTs)
+        new Decoded(recs, part.posStart, relPos, sel, descentAt, kept)
+      else new Decoded(recs, part.posStart, relPos, sortedSlots(recs, sel), 0, kept)
+    }
+
+    /** Slots ordered by unsigned timestamp, ties in kept order: the packed
+     * key `ts << 31 | j` (ts < 2^32, j < 2^31) sorts as a plain long. */
+    private def sortedSlots(recs: Array[Byte], sel: Array[Int]): Array[Int] = {
+      val keys = new Array[Long](kept)
+      var j = 0
+      while (j < kept) {
+        keys(j) = (timestampAt(recs, (if (sel == null) j else sel(j)) * PointSize) << 31) | j
+        j += 1
+      }
+      java.util.Arrays.sort(keys)
+      val out = new Array[Int](kept)
+      j = 0
+      while (j < kept) {
+        val k = (keys(j) & 0x7fffffffL).toInt
+        out(j) = if (sel == null) k else sel(k)
+        j += 1
+      }
+      out
+    }
+  }
+
+  /** Plain files: one ranged read per split, filtered in place. The planner
+   * caps splits at maxPointsPerSplit / Int.MaxValue bytes, so the buffer
+   * always fits. */
   private def loadRanged(
       raw: org.apache.hadoop.fs.FSDataInputStream,
       part: WhisperInputPartition,
-      options: WhisperOptions,
-      preds: Seq[WPred],
-      enforceWindows: Boolean): Decoded = {
-    val byteStart = part.archiveOffset + part.posStart * WhisperCodec.PointSize
-    val byteLen = part.posCount * WhisperCodec.PointSize
+      pass: Pass): Decoded = {
+    val byteStart = part.archiveOffset + part.posStart * PointSize
+    val byteLen = part.posCount * PointSize
     require(byteLen <= Int.MaxValue, s"split too large: $byteLen bytes; lower maxPointsPerSplit")
     val buf = new Array[Byte](byteLen.toInt)
     var got = 0
@@ -778,124 +893,83 @@ private[whisper] object WhisperDecode {
     } catch {
       case _: java.io.EOFException => // truncated: keep what we read
     }
-    val nPoints = got / WhisperCodec.PointSize
-    val positions = new Array[Long](nPoints)
-    val timestamps = new Array[Long](nPoints)
-    val values = new Array[Double](nPoints)
-    var n = 0
-    WhisperCodec.foreachPoint(buf, 0, nPoints, part.posStart) { (pos, ts, v) =>
-      val keep = (!options.dropTimeZero || ts != 0L) &&
-        preds.forall(_.eval(part.filePath, part.archiveIndex, pos, ts, v))
-      if (keep) {
-        if (enforceWindows) checkWindow(part, pos, ts)
-        positions(n) = pos
-        timestamps(n) = ts
-        values(n) = v
-        n += 1
-      }
+    val nPoints = got / PointSize
+    var k = 0
+    while (k < nPoints) {
+      val ts = timestampAt(buf, k * PointSize)
+      if (pass.accepts(k, ts, valueAt(buf, k * PointSize))) pass.add(k, ts)
+      k += 1
     }
-    Decoded(positions, timestamps, values, buildOrder(options, timestamps, n), n)
+    pass.decoded(buf, compacted = false)
   }
 
   /** Gzip archives are non-splittable (one partition spans the whole
    * archive) and therefore must NOT be buffered whole: a >2 GiB decompressed
    * region would exceed the JVM array limit. Decode the stream in bounded
-   * chunks into growable filtered builders — memory scales with the rows
-   * KEPT, not the archive's decompressed size. Only a kept-row count beyond
-   * the array limit is a hard error (and says so explicitly). */
+   * chunks and copy the kept records into one growable buffer — memory
+   * scales with the rows KEPT, not the archive's decompressed size. Only a
+   * kept-row count beyond that one buffer is a hard error (and says so). */
   private def loadGzipStreaming(
       raw: org.apache.hadoop.fs.FSDataInputStream,
       part: WhisperInputPartition,
-      options: WhisperOptions,
-      preds: Seq[WPred],
-      enforceWindows: Boolean): Decoded = {
+      pass: Pass): Decoded = {
     val gin = new GZIPInputStream(raw, 1 << 16)
-    var toSkip = part.archiveOffset + part.posStart * WhisperCodec.PointSize
+    var toSkip = part.archiveOffset + part.posStart * PointSize
     while (toSkip > 0) {
       val s = gin.skip(toSkip)
       if (s <= 0) toSkip = 0 else toSkip -= s
     }
     val chunkPts = math.min(part.posCount, 1L << 20).toInt // <= 12 MiB buffer
-    val buf = new Array[Byte](chunkPts * WhisperCodec.PointSize)
-    val posB = scala.collection.mutable.ArrayBuilder.make[Long]
-    val tsB = scala.collection.mutable.ArrayBuilder.make[Long]
-    val valB = scala.collection.mutable.ArrayBuilder.make[Double]
-    var kept = 0L
-    var posBase = part.posStart
+    val chunk = new Array[Byte](chunkPts * PointSize)
+    var recs = new Array[Byte](chunk.length)
+    var copied = 0
+    // appends chunk records [from, until), all kept, after the kept records
+    def copy(from: Int, until: Int): Unit = if (until > from) {
+      val need = (copied + until - from).toLong * PointSize
+      if (need > recs.length)
+        recs = java.util.Arrays.copyOf(recs, math.min(math.max(need, 2L * recs.length), MaxGzipRows.toLong * PointSize).toInt)
+      System.arraycopy(chunk, from * PointSize, recs, copied * PointSize, (until - from) * PointSize)
+      copied += until - from
+    }
+    var rel = 0L
     var remaining = part.posCount
     var eof = false
     while (remaining > 0 && !eof) {
       val wantPts = math.min(remaining, chunkPts.toLong).toInt
-      val want = wantPts * WhisperCodec.PointSize
+      val want = wantPts * PointSize
       val got =
-        try WhisperCodec.readFully(gin, buf, want)
+        try WhisperCodec.readFully(gin, chunk, want)
         catch { case _: java.io.EOFException => 0 } // truncated: keep what we read
-      val n = got / WhisperCodec.PointSize
-      WhisperCodec.foreachPoint(buf, 0, n, posBase) { (pos, ts, v) =>
-        val keep = (!options.dropTimeZero || ts != 0L) &&
-          preds.forall(_.eval(part.filePath, part.archiveIndex, pos, ts, v))
-        if (keep) {
-          if (kept == Int.MaxValue - 8)
+      val n = got / PointSize
+      var run = 0 // chunk records [run, k) are kept and not yet copied
+      var k = 0
+      while (k < n) {
+        val ts = timestampAt(chunk, k * PointSize)
+        if (pass.accepts(rel + k, ts, valueAt(chunk, k * PointSize))) {
+          if (pass.kept == MaxGzipRows)
             throw new IllegalStateException(
-              s"gzip archive too large: >${Int.MaxValue - 8} rows survive filtering in " +
-                s"${part.filePath} archive ${part.archiveIndex}; gzip is non-splittable — " +
-                "re-compress as plain .wsp to enable ranged splits")
-          if (enforceWindows) checkWindow(part, pos, ts)
-          posB += pos; tsB += ts; valB += v
-          kept += 1
+              s"gzip archive too large: more than $MaxGzipRows rows survive filtering in " +
+                s"${part.filePath} archive ${part.archiveIndex}, the most one decode buffer holds; " +
+                "gzip is non-splittable — re-compress as plain .wsp to enable ranged splits")
+          pass.add(rel + k, ts)
+        } else {
+          copy(run, k)
+          run = k + 1
         }
+        k += 1
       }
-      posBase += n
+      copy(run, n)
+      rel += n
       remaining -= n
       if (got < want) eof = true
     }
-    val timestamps = tsB.result()
-    Decoded(posB.result(), timestamps, valB.result(),
-      buildOrder(options, timestamps, kept.toInt), kept.toInt)
-  }
-
-  /** Identity order, or the ring rotation when timeSort is on. A well-formed
-   * ring's filled slots form at most 2 ascending runs; >1 descent falls back
-   * to a real sort. */
-  private def buildOrder(options: WhisperOptions, timestamps: Array[Long], nRows: Int): Array[Int] = {
-    val ord = Array.tabulate(nRows)(identity)
-    if (!options.timeSort || nRows <= 1) return ord
-    var drops = 0
-    var dropAt = 0
-    var i = 1
-    while (i < nRows && drops <= 1) {
-      if (timestamps(i) < timestamps(i - 1)) { drops += 1; dropAt = i }
-      i += 1
-    }
-    if (drops == 0) ord
-    else if (drops == 1) {
-      val out = new Array[Int](nRows)
-      var k = 0
-      var j = dropAt
-      while (j < nRows) { out(k) = j; k += 1; j += 1 }
-      j = 0
-      while (j < dropAt) { out(k) = j; k += 1; j += 1 }
-      var ok = true
-      k = 1
-      while (k < nRows && ok) {
-        if (timestamps(out(k)) < timestamps(out(k - 1))) ok = false
-        k += 1
-      }
-      if (ok) out else sortedOrder(timestamps, nRows)
-    } else sortedOrder(timestamps, nRows)
-  }
-
-  private def sortedOrder(timestamps: Array[Long], nRows: Int): Array[Int] = {
-    val boxed: Array[Integer] = Array.tabulate[Integer](nRows)(i => Integer.valueOf(i))
-    java.util.Arrays.sort(
-      boxed,
-      (a: Integer, b: Integer) => java.lang.Long.compare(timestamps(a), timestamps(b))
-    )
-    boxed.map(_.intValue())
+    pass.decoded(recs, compacted = true)
   }
 }
 
-/** Columnar reader: emits ColumnarBatches of up to `BatchSize` rows. */
+/** Columnar reader: emits ColumnarBatches of up to `BatchSize` rows, filled
+ * straight from the partition's records; `file` and `archive` are set once
+ * per partition as constant vectors. */
 class WhisperColumnarReader(
     part: WhisperInputPartition,
     options: WhisperOptions,
@@ -903,48 +977,56 @@ class WhisperColumnarReader(
     requiredSchema: StructType,
     enforceWindows: Boolean = false
 ) extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
+  import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
+  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
   private val BatchSize = 4096
   private val d = WhisperDecode.load(part, options, preds, enforceWindows)
-  private val fileBytes = part.filePath.getBytes("UTF-8")
   private var offset = 0
-  private val vectors = OnHeapColumnVector.allocateColumns(BatchSize, requiredSchema)
-  private val batch = new ColumnarBatch(vectors.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]])
+  private val slots = new Array[Int](BatchSize)
+  private val vectors: Array[ColumnVector] = requiredSchema.fields.map { f =>
+    f.name match {
+      case "file" =>
+        val c = new ConstantColumnVector(BatchSize, f.dataType)
+        c.setUtf8String(UTF8String.fromString(part.filePath))
+        c
+      case "archive" =>
+        val c = new ConstantColumnVector(BatchSize, f.dataType)
+        c.setInt(part.archiveIndex)
+        c
+      case _ => new OnHeapColumnVector(BatchSize, f.dataType)
+    }
+  }
+  private val batch = new ColumnarBatch(vectors)
 
   override def next(): Boolean = {
     if (offset >= d.nRows) return false
     val n = math.min(BatchSize, d.nRows - offset)
+    var i = 0
+    while (i < n) { slots(i) = d.slot(offset + i); i += 1 }
     var f = 0
-    while (f < requiredSchema.length) {
-      val v = vectors(f)
-      v.reset()
-      requiredSchema.fields(f).name match {
-        case "file" =>
-          var i = 0
-          while (i < n) { v.putByteArray(i, fileBytes); i += 1 }
-        case "archive" =>
-          v.putInts(0, n, part.archiveIndex)
-        case "position" =>
-          var i = 0
-          while (i < n) { v.putLong(i, d.positions(d.order(offset + i))); i += 1 }
-        case "timestamp" =>
-          if (options.toDatetime) {
-            var i = 0
-            while (i < n) { v.putLong(i, d.timestamps(d.order(offset + i)) * 1000000L); i += 1 }
-          } else {
-            var i = 0
-            while (i < n) { v.putInt(i, d.timestamps(d.order(offset + i)).toInt); i += 1 }
+    while (f < vectors.length) {
+      vectors(f) match {
+        case v: OnHeapColumnVector =>
+          v.reset()
+          requiredSchema.fields(f).name match {
+            case "position" =>
+              i = 0
+              while (i < n) { v.putLong(i, d.position(slots(i))); i += 1 }
+            case "timestamp" =>
+              i = 0
+              if (options.toDatetime)
+                while (i < n) { v.putLong(i, d.timestamp(slots(i)) * 1000000L); i += 1 }
+              else
+                while (i < n) { v.putInt(i, d.timestamp(slots(i)).toInt); i += 1 }
+            case "value" =>
+              i = 0
+              if (options.dtype == "float")
+                while (i < n) { v.putFloat(i, d.value(slots(i)).toFloat); i += 1 }
+              else
+                while (i < n) { v.putDouble(i, d.value(slots(i))); i += 1 }
           }
-        case "value" =>
-          if (options.dtype == "float") {
-            var i = 0
-            while (i < n) { v.putFloat(i, d.values(d.order(offset + i)).toFloat); i += 1 }
-          } else {
-            var i = 0
-            while (i < n) { v.putDouble(i, d.values(d.order(offset + i))); i += 1 }
-          }
+        case _ => // constant per partition
       }
       f += 1
     }
@@ -985,17 +1067,17 @@ class WhisperPartitionReader(
         case "archive" =>
           (row: GenericInternalRow, out: Int, i: Int) => row.setInt(out, part.archiveIndex)
         case "position" =>
-          (row: GenericInternalRow, out: Int, i: Int) => row.setLong(out, d.positions(i))
+          (row: GenericInternalRow, out: Int, s: Int) => row.setLong(out, d.position(s))
         case "timestamp" =>
           if (options.toDatetime)
-            (row: GenericInternalRow, out: Int, i: Int) => row.setLong(out, d.timestamps(i) * 1000000L)
+            (row: GenericInternalRow, out: Int, s: Int) => row.setLong(out, d.timestamp(s) * 1000000L)
           else
-            (row: GenericInternalRow, out: Int, i: Int) => row.setInt(out, d.timestamps(i).toInt)
+            (row: GenericInternalRow, out: Int, s: Int) => row.setInt(out, d.timestamp(s).toInt)
         case "value" =>
           if (options.dtype == "float")
-            (row: GenericInternalRow, out: Int, i: Int) => row.setFloat(out, d.values(i).toFloat)
+            (row: GenericInternalRow, out: Int, s: Int) => row.setFloat(out, d.value(s).toFloat)
           else
-            (row: GenericInternalRow, out: Int, i: Int) => row.setDouble(out, d.values(i))
+            (row: GenericInternalRow, out: Int, s: Int) => row.setDouble(out, d.value(s))
       }
     }
 
@@ -1007,10 +1089,10 @@ class WhisperPartitionReader(
   }
 
   override def get(): InternalRow = {
-    val i = d.order(rowIdx)
+    val s = d.slot(rowIdx)
     var f = 0
     while (f < fieldWriters.length) {
-      fieldWriters(f)(row, f, i)
+      fieldWriters(f)(row, f, s)
       f += 1
     }
     row

@@ -1,7 +1,9 @@
 package graft
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream}
+import java.nio.ByteBuffer
 import java.nio.file.{Files, Path}
+import java.util.zip.GZIPOutputStream
 
 import scala.util.Random
 
@@ -18,9 +20,10 @@ import graft.format.WhisperWriter.{ArchiveSpec, FileSpec}
  * reference read built from the codec primitives alone (`WhisperCodec.parseMeta`
  * + `streamPoints`). `WhisperCodecProps` already fuzzes writer->codec; this spec
  * closes the remaining gap (VERDICT r7 #6): codec->connector, across random
- * (archive count, sizes, rotation, fill, truncation point, gzip) x (dropTimeZero,
- * timeSort, toDatetime, dtype, vectorized, maxPointsPerSplit) configurations,
- * including pushdown-vs-post-filter equality.
+ * (archive count, sizes, rotation, fill, timestamp era, out-of-era residue,
+ * truncation point, gzip) x (dropTimeZero, timeSort, toDatetime, dtype,
+ * vectorized, maxPointsPerSplit) configurations, including pushdown-vs-post-filter
+ * equality and each partition's emission order.
  *
  * Determinism: one fixed seed; every generated config is reproducible and the
  * failure message prints it.
@@ -44,6 +47,9 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private case class Cfg(
       spec: FileSpec,
+      // (archive, slot, timestamp) patched over the written ring: stale
+      // residue from older eras, or a duplicate of a live timestamp
+      residue: Seq[(Int, Long, Long)],
       gz: Boolean,
       truncKeep: Option[Int], // uncompressed-only; keep >= header size
       dropTimeZero: Boolean,
@@ -63,10 +69,28 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val points = 50L + rnd.nextInt(1500)
       val filled = rnd.nextInt(points.toInt + 1).toLong
       val rotation = rnd.nextInt(points.toInt).toLong
-      val lastTs = 1500000000L + rnd.nextInt(400000000)
+      // u32 seconds before 2^31, straddling it, or wholly past it (2038-01-19)
+      val lastTs = rnd.nextInt(3) match {
+        case 0 => 1500000000L + rnd.nextInt(400000000)
+        case 1 => (1L << 31) + rnd.nextLong(spp * points)
+        case _ => (1L << 31) + rnd.nextInt(2000000000)
+      }
       ArchiveSpec(spp, points, filled, lastTs - lastTs % spp, rotation)
     }
     val spec = FileSpec(archives = archives)
+    val residue = archives.zipWithIndex.flatMap { case (a, ai) =>
+      if (rnd.nextInt(3) != 0) Nil
+      else Seq.fill(1 + rnd.nextInt(3)) {
+        val ts =
+          if (rnd.nextBoolean() && a.filled > 0) a.lastTimestamp - rnd.nextLong(a.filled) * a.secondsPerPoint
+          else {
+            val older = a.lastTimestamp - a.retention * (1 + rnd.nextInt(3)) -
+              rnd.nextLong(a.points) * a.secondsPerPoint
+            if (older > 0) older else 1L + rnd.nextInt(1000)
+          }
+        (ai, rnd.nextLong(a.points), ts)
+      }
+    }
     val gz = rnd.nextInt(4) == 0
     val headerSize = (WhisperCodec.FileMetaSize + WhisperCodec.ArchiveMetaSize * nArch).toLong
     val totalSize = headerSize + archives.map(_.points * WhisperCodec.PointSize).sum
@@ -75,7 +99,7 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         Some((headerSize + rnd.nextLong(totalSize - headerSize + 1)).toInt)
       else None
     Cfg(
-      spec, gz, trunc,
+      spec, residue, gz, trunc,
       dropTimeZero = rnd.nextBoolean(),
       timeSort = rnd.nextBoolean(),
       toDatetime = rnd.nextBoolean(),
@@ -85,12 +109,30 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     )
   }
 
-  /** (archive, position, rawTimestampSeconds, valueBitsAfterDtypeCast) */
-  private def referenceRows(cfg: Cfg): Seq[(Int, Long, Long, Long)] = {
+  /** The file's (uncompressed) bytes: the written rings, residue patched
+   * in, truncated. */
+  private def fileBytes(cfg: Cfg): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     WhisperWriter.write(bos, cfg.spec)
     val full = bos.toByteArray
-    val bytes = cfg.truncKeep.fold(full)(full.take)
+    val bb = ByteBuffer.wrap(full)
+    cfg.residue.foreach { case (ai, slot, ts) =>
+      val offset = bb.getInt(WhisperCodec.FileMetaSize + WhisperCodec.ArchiveMetaSize * ai)
+      bb.putInt(offset + (slot * WhisperCodec.PointSize).toInt, ts.toInt)
+    }
+    cfg.truncKeep.fold(full)(full.take)
+  }
+
+  private def writeFile(cfg: Cfg, path: Path): Unit = {
+    val out = Files.newOutputStream(path)
+    val sink = if (cfg.gz) new GZIPOutputStream(out) else out
+    try sink.write(fileBytes(cfg))
+    finally sink.close()
+  }
+
+  /** (archive, position, rawTimestampSeconds, valueBitsAfterDtypeCast) */
+  private def referenceRows(cfg: Cfg): Seq[(Int, Long, Long, Long)] = {
+    val bytes = fileBytes(cfg)
     val meta = WhisperCodec.parseMeta(bytes, "mem", bytes.length.toLong)
     val out = Seq.newBuilder[(Int, Long, Long, Long)]
     meta.archives.foreach { a =>
@@ -110,25 +152,35 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     out.result()
   }
 
-  private def scanRows(cfg: Cfg, path: Path): Seq[(Int, Long, Long, Long)] = {
+  /** The scan's rows, each partition's in emission order, keyed by
+   * partition id. */
+  private def scanPartitions(cfg: Cfg, path: Path, vectorized: Boolean): Seq[(Int, Seq[(Int, Long, Long, Long)])] = {
     val df = spark.read.format("whisper")
       .option("dropTimeZero", cfg.dropTimeZero.toString)
       .option("timeSort", cfg.timeSort.toString)
       .option("toDatetime", cfg.toDatetime.toString)
       .option("dtype", cfg.dtype)
-      .option("vectorized", cfg.vectorized.toString)
+      .option("vectorized", vectorized.toString)
       .option("maxPointsPerSplit", cfg.maxPointsPerSplit.toString)
       .load(path.toString)
-    df.collect().toSeq.map { r =>
+    val rows = df.select(spark_partition_id(), col("*")).collect().toSeq.map { r =>
       val ts =
-        if (cfg.toDatetime) r.getTimestamp(3).toInstant.getEpochSecond
-        else r.getInt(3).toLong & 0xffffffffL
+        if (cfg.toDatetime) r.getTimestamp(4).toInstant.getEpochSecond
+        else r.getInt(4).toLong & 0xffffffffL
       val bits =
-        if (cfg.dtype == "float") java.lang.Float.floatToIntBits(r.getFloat(4)).toLong
-        else java.lang.Double.doubleToLongBits(r.getDouble(4))
-      (r.getInt(1), r.getLong(2), ts, bits)
+        if (cfg.dtype == "float") java.lang.Float.floatToIntBits(r.getFloat(5)).toLong
+        else java.lang.Double.doubleToLongBits(r.getDouble(5))
+      r.getInt(0) -> (r.getInt(2), r.getLong(3), ts, bits)
     }
+    rows.map(_._1).distinct.map(p => p -> rows.collect { case (`p`, row) => row })
   }
+
+  private def scanRows(cfg: Cfg, path: Path): Seq[(Int, Long, Long, Long)] =
+    scanPartitions(cfg, path, cfg.vectorized).flatMap(_._2)
+
+  /** Number of descents in one archive's kept timestamps, in ring order. */
+  private def descents(rows: Seq[(Int, Long, Long, Long)]): Int =
+    rows.sliding(2).count(p => p.size == 2 && p(1)._3 < p(0)._3)
 
   test("fuzz: bin-packed multi-file trees == per-unit partitions, 6 random forests") {
     val rnd = new Random(8148L)
@@ -333,26 +385,36 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("fuzz: DSv2 scan == pure-JVM codec read across 24 random configs") {
     val rnd = new Random(20260814L)
+    var past2038 = 0
+    var unsorted = 0
     (1 to 24).foreach { i =>
       val cfg = genCfg(rnd)
       val path = dir.resolve(s"fuzz$i.wsp" + (if (cfg.gz) ".gz" else ""))
-      if (cfg.truncKeep.isEmpty) WhisperWriter.writeFile(path, cfg.spec)
-      else {
-        val tmp = dir.resolve(s"fuzz${i}_full.wsp")
-        WhisperWriter.writeFile(tmp, cfg.spec)
-        WhisperWriter.truncateCopy(tmp, path, cfg.truncKeep.get)
-        Files.delete(tmp)
-      }
+      writeFile(cfg, path)
       val expected = referenceRows(cfg)
       val actual = scanRows(cfg, path)
       val ctx = s"config #$i: $cfg"
       assert(actual.size == expected.size, s"$ctx row count ${actual.size} != ${expected.size}")
       assert(actual.sorted == expected.sorted, s"$ctx content mismatch")
+      if (expected.exists(_._3 >= (1L << 31))) past2038 += 1
+      if (expected.groupBy(_._1).values.exists(descents(_) > 1)) unsorted += 1
+
+      // emission order, both readers: each partition (one archive, or one
+      // chunk of it) in ring order, or with timeSort a stable sort of that
+      // by UNSIGNED timestamp
+      Seq(true, false).foreach { vectorized =>
+        scanPartitions(cfg, path, vectorized).foreach { case (pid, rows) =>
+          val ringOrder = rows.sortBy(r => (r._1, r._2))
+          val want = if (cfg.timeSort) ringOrder.sortBy(_._3) else ringOrder
+          assert(rows == want, s"$ctx vectorized=$vectorized partition $pid emission order")
+        }
+      }
 
       // timeSort contract: within an archive (one scan partition, so collect
       // preserves its emission order) timestamps are non-decreasing once
-      // never-filled slots are dropped
-      if (cfg.timeSort && cfg.dropTimeZero) {
+      // never-filled slots are dropped; out-of-era residue voids it across
+      // an archive's ordered chunks
+      if (cfg.timeSort && cfg.dropTimeZero && cfg.residue.isEmpty) {
         actual.groupBy(_._1).foreach { case (a, rows) =>
           assert(rows.sliding(2).forall(p => p.size < 2 || p(0)._3 <= p(1)._3),
             s"$ctx archive $a not time-sorted")
@@ -380,9 +442,13 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
           else
             df.filter(col("archive") === arch && col("timestamp") >= lit(tsCut.toInt))
         val got = filtered.count()
-        val want = expected.count(r => r._1 == arch && r._3 >= tsCut).toLong
+        // an INT timestamp column holds the u32 seconds as a signed int
+        val want = expected.count(r => r._1 == arch &&
+          (if (cfg.toDatetime) r._3 >= tsCut else r._3.toInt >= tsCut.toInt)).toLong
         assert(got == want, s"$ctx pushdown count $got != $want (arch=$arch tsCut=$tsCut)")
       }
     }
+    assert(past2038 > 0 && unsorted > 0,
+      s"generator coverage: $past2038 configs with timestamps >= 2^31, $unsorted with a multi-descent ring")
   }
 }

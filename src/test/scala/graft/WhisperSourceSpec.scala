@@ -172,6 +172,22 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(counts == Map(0 -> 8640L, 1 -> 23000L, 2 -> 8000L))
   }
 
+  test("WhisperFile.read opens .gz header-only; meta streams the decompressed size on use") {
+    def archive1(f: WhisperFile) = f.archive(1).toFrame().collect().toSeq
+    val gz = WhisperFile.read(spark, miniGz.toString)
+    val rows = archive1(gz)
+    assert(rows.length == 23000)
+    assert(rows == archive1(WhisperFile.read(spark, mini.toString)))
+    assert(gz.meta.fileSizeActual == expectedSize) // decompressed, != on-disk
+    assert(!gz.meta.fileSizeMismatch)
+    // a .gz cut short after its header still opens: read never streams the body
+    val cut = dir.resolve("mini_cut.wsp.gz")
+    WhisperWriter.truncateCopy(miniGz, cut, (Files.size(miniGz) / 2).toInt)
+    val cutFile = WhisperFile.read(spark, cut.toString)
+    assert(cutFile.archives.map(_.meta.points) == Seq(8640L, 43200L, 8760L))
+    intercept[java.io.EOFException](cutFile.meta)
+  }
+
   // --- corruption (test_whisper_pandas.py:100-103) ---
 
   test("truncated file: headers parse, mismatch flagged, scan degrades cleanly") {
@@ -211,6 +227,33 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cut = to_timestamp(lit("2020-09-13 12:30:00"))
     assert(binned.filter(col("timestamp") >= cut).count() ==
       unbinned.filter(col("timestamp") >= cut).count())
+  }
+
+  test("file/archive constants follow each unit inside bin-packed partitions") {
+    val tree = dir.resolve("consttree")
+    val files = (0 until 12).map { i =>
+      val path = tree.resolve(f"c$i%02d.wsp" + (if (i % 4 == 3) ".gz" else ""))
+      WhisperWriter.writeFile(path, FileSpec(archives = (0 to i % 3).map { a =>
+        ArchiveSpec(10L * (a + 1), 30L + 7 * i + a, filled = 20L + i, lastTimestamp = 1600000000L, rotation = i.toLong)
+      }))
+      path.getFileName.toString -> WhisperMeta.read(path.toString)
+    }
+    // dropTimeZero=false keeps every slot, so each (file, archive) count is its header's points
+    val fromHeaders = files.flatMap { case (name, m) => m.archives.map(a => (name, a.index) -> a.points) }.toMap
+    def name(file: String) = file.substring(file.lastIndexOf('/') + 1)
+    Seq("true", "false").foreach { vectorized =>
+      val df = read(s"$tree/*",
+        Map("binThreshold" -> "1", "dropTimeZero" -> "false", "vectorized" -> vectorized))
+      assert(df.rdd.getNumPartitions < fromHeaders.size, "units were not bin-packed")
+      val counts = df.groupBy("file", "archive").count().collect()
+        .map(r => (name(r.getString(0)), r.getInt(1)) -> r.getLong(2)).toMap
+      assert(counts == fromHeaders, s"vectorized=$vectorized")
+      assert(df.select("file").distinct().count() == files.size.toLong)
+      // some task switches between units with different constants
+      val unitsPerTask = df.select(spark_partition_id().as("pid"), col("file"), col("archive"))
+        .distinct().groupBy("pid").count()
+      assert(unitsPerTask.filter(col("count") > 1).count() > 0)
+    }
   }
 
   // --- pushdown & pruning (connector-specific) ---
