@@ -4,100 +4,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Approximate nearest neighbour scale paths over an `array<double>` column.
- * Brute force ([[VectorOps.knnBruteForce]]) is the exact baseline; these two
- * make the 100 TB case tractable by turning all-pairs into bucket-local work:
- *
- *  - random-hyperplane LSH (Charikar '02): k sign-projections -> k-bit bucket
- *    key; cosine-similar vectors collide with probability (1 - theta/pi)^k.
- *    Deterministic: hyperplanes come from a seeded RNG, inlined as literals.
- *  - IVF: coarse quantization against a deterministic centroid sample; search
- *    probes only the nearest `nprobe` inverted lists.
- *
- * Both produce a `bucket` column — the partition/shuffle key. A query then
- * touches one bucket (plus probes) instead of the full corpus.
+ * Approximate nearest neighbour scale path over an `array<double>` column.
+ * Brute force ([[VectorOps.knnBruteForce]]) is the exact baseline; IVF makes
+ * the 100 TB case tractable by turning all-pairs into bucket-local work:
+ * coarse quantization against a deterministic centroid sample, and a search
+ * that probes only the nearest `nprobe` inverted lists. The assignment is a
+ * `bucket` column — the partition/shuffle key — so a query touches its
+ * probed buckets instead of the full corpus.
  */
 object AnnIndex {
 
-  /** Deterministic unit-free hyperplanes: nPlanes x dim standard normals. */
-  def hyperplanes(nPlanes: Int, dim: Int, seed: Long): Array[Array[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    Array.fill(nPlanes)(Array.fill(dim)(rnd.nextGaussian()))
-  }
-
   private def arraySql(xs: Array[Double]): String =
     xs.map(x => s"${x}D").mkString("array(", ",", ")")
-
-  /** Add an LSH `bucket` column (bit b set iff emb . plane_b > 0). */
-  def lshBucketize(df: DataFrame, embCol: String, planes: Array[Array[Double]]): DataFrame = {
-    val bits = planes.zipWithIndex.map { case (p, i) =>
-      when(
-        expr(s"aggregate(zip_with($embCol, ${arraySql(p)}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)") > 0,
-        lit(1L << i)
-      ).otherwise(lit(0L))
-    }
-    df.withColumn("bucket", bits.reduce(_ + _))
-  }
-
-  /** All bucket ids within Hamming distance `probeBits` of `center` — the
-   * multi-probe set, sum of C(nPlanes, d) for d <= probeBits ids. Enumerated
-   * driver-side (it depends only on the query, never on data) so the search
-   * filter is a literal IN-list that PUSHES DOWN. Which pruning tier carries
-   * it depends on the layout: a `partitionBy("bucket")` directory layout and
-   * a `bucketBy("bucket")` table prune at the CATALOG level, for any id
-   * count (the 100 TB layout — AnnPruneSpec pins the documented 137-id
-   * config on it). Parquet ROW-GROUP stats pruning, by contrast, only sees
-   * the IN-list verbatim up to
-   * `spark.sql.parquet.pushdown.inFilterThreshold` (default 10) ids; above
-   * that Spark pushes a min/max range, and because the XOR ball scatters
-   * across the id domain the range covers nearly everything — so on a flat
-   * parquet index either raise that threshold to cover the probe count or
-   * accept scan-with-filter. */
-  def probeBuckets(center: Long, nPlanes: Int, probeBits: Int): Seq[Long] = {
-    def flips(start: Int, left: Int): Seq[Long] =
-      if (left == 0) Seq(0L)
-      else (start until nPlanes).flatMap(i => flips(i + 1, left - 1).map(m => m | (1L << i)))
-    (0 to probeBits).flatMap(d => flips(0, d)).map(_ ^ center)
-  }
-
-  /** The query vector's LSH bucket under `planes` (sign of each projection). */
-  def queryBucket(queryVec: Array[Double], planes: Array[Array[Double]]): Long =
-    planes.zipWithIndex.map { case (p, i) =>
-      val dot = p.zip(queryVec).map { case (a, b) => a * b }.sum
-      if (dot > 0) 1L << i else 0L
-    }.sum
-
-  /** Top-k by cosine among vectors sharing the query's bucket, widened to
-   * buckets within Hamming distance `probeBits` (multi-probe improves
-   * recall). The probe set is an explicit IN-list of bucket ids, NOT a
-   * `bit_count(bucket ^ q)` predicate over the whole corpus: an arithmetic
-   * predicate must evaluate on every row, while the IN-list reaches the
-   * scan (PushedFilters / bucket pruning / partition pruning), so the
-   * search touches only the probed buckets — the property that makes LSH
-   * pay off at 100 TB. Plan pinned by AnnPruneSpec. */
-  def lshSearch(
-      indexed: DataFrame,
-      embCol: String,
-      queryVec: Array[Double],
-      planes: Array[Array[Double]],
-      k: Int,
-      probeBits: Int
-  ): DataFrame = {
-    val qBucket = queryBucket(queryVec, planes)
-    val qSql = arraySql(queryVec)
-    indexed
-      .filter(col("bucket").isin(probeBuckets(qBucket, planes.length, probeBits): _*))
-      .withColumn(
-        "cos",
-        expr(
-          s"""aggregate(zip_with($embCol, $qSql, (x, y) -> x * y), 0D, (acc, x) -> acc + x)
-             | / (sqrt(aggregate($embCol, 0D, (acc, x) -> acc + x * x))
-             |    * sqrt(aggregate($qSql, 0D, (acc, x) -> acc + x * x)))""".stripMargin
-        )
-      )
-      .orderBy(col("cos").desc)
-      .limit(k)
-  }
 
   /** IVF coarse centroids: a deterministic systematic sample of the corpus
    * (every `step`-th vector by id) — sampling beats k-means iterations when

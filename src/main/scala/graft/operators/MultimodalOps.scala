@@ -327,10 +327,9 @@ object MultimodalOps {
    * them; synthesizing 60k+ PNG/WAV payloads is fixture setup, not the
    * pipeline stage under test, so it must not ride inside the timed query
    * (same memoization rationale as [[VectorOps]]'s IVF index). Staleness
-   * hazard, same trade as there: keyed by `dir` with no mtime check — a
-   * harness that rewrites documents parquet in-place within one JVM must
-   * call the matching `invalidate*Cache` or the stage replays stale
-   * payloads.
+   * hazard, same trade as there: keyed by `dir` with no length/mtime check
+   * and no invalidation, so documents parquet rewritten in place within one
+   * JVM replays the stale payloads until the process exits.
    *
    * get + putIfAbsent, not computeIfAbsent: the miss path runs a Spark
    * job, and a CHM mapping function that blocks both serializes same-bin
@@ -380,8 +379,6 @@ object MultimodalOps {
   }
 
   private val videoAssetCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def invalidateVideoAssetCache(dir: String): Unit = videoAssetCache.remove(dir)
 
   def videoAssetsStored(spark: SparkSession, dir: String): Dataset[Asset] = {
     import spark.implicits._
@@ -1080,8 +1077,6 @@ object MultimodalOps {
    * payloads; synthesizing ~25k PNG frames stays out of the timed query. */
   private val videoPatternCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  def invalidateVideoPatternCache(dir: String): Unit = videoPatternCache.remove(dir)
-
   def videoPatternAssetsStored(spark: SparkSession, dir: String): Dataset[Asset] = {
     import spark.implicits._
     readStored(spark, storedFixture(videoPatternCache, "graft_video_pattern_assets", dir) {
@@ -1104,8 +1099,6 @@ object MultimodalOps {
    * timed stage is read + decode + hash + join, not PNG synthesis. */
   private val imagePatternCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  def invalidateImagePatternCache(dir: String): Unit = imagePatternCache.remove(dir)
-
   def imagePatternAssetsStored(spark: SparkSession, dir: String): Dataset[Asset] = {
     import spark.implicits._
     readStored(spark, storedFixture(imagePatternCache, "graft_image_pattern_assets", dir) {
@@ -1123,8 +1116,6 @@ object MultimodalOps {
   /** Amplitude-pattern WAV fixtures for q126, stored — same discipline;
    * twins at doc_id % 50 == 2 with 3 frame amplitudes flipped. */
   private val audioPatternCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def invalidateAudioPatternCache(dir: String): Unit = audioPatternCache.remove(dir)
 
   def audioPatternAssetsStored(spark: SparkSession, dir: String): Dataset[Asset] = {
     import spark.implicits._
@@ -1341,8 +1332,6 @@ object MultimodalOps {
   /** Staircase WAV fixtures for q130, stored — twins at doc_id % 50 == 4
    * replay the previous doc's signal time-shifted by 2 silent frames. */
   private val audioLandmarkCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def invalidateAudioLandmarkCache(dir: String): Unit = audioLandmarkCache.remove(dir)
 
   def audioLandmarkAssetsStored(spark: SparkSession, dir: String): Dataset[Asset] = {
     import spark.implicits._

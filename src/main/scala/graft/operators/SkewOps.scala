@@ -1,51 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
  * Skew mitigation utilities. AQE's skew-join splitting handles most cases at
  * runtime (`spark.sql.adaptive.skewJoin.enabled`, on by default in our
- * sessions); these are the explicit tools for the two shapes AQE can't fix:
- * a single hot GROUP BY key, and a broadcast-ineligible join with known hot
- * keys.
+ * sessions); this is the explicit tool for a shape AQE can't fix: a
+ * broadcast-ineligible join with known hot keys.
  */
 object SkewOps {
-
-  /**
-   * Two-phase (salted) aggregation: groupBy(keys + random salt) computes
-   * partials across `salts` reducers, then a second groupBy(keys) merges.
-   * Use when one key dominates (a hot user, a null bucket) and a single
-   * reducer would own nearly all rows. Supports the decomposable aggregates
-   * (`sum`/`count`/`min`/`max`) — exactly the ones whose partial/final split
-   * is lossless.
-   */
-  def saltedAgg(
-      df: DataFrame,
-      keys: Seq[String],
-      aggs: Map[String, String], // column -> one of sum|count|min|max
-      salts: Int = 16
-  ): DataFrame = {
-    require(aggs.values.forall(Set("sum", "count", "min", "max")), "only decomposable aggregates")
-    val salted = df.withColumn("__salt", pmod(spark_partition_id() + monotonically_increasing_id(), lit(salts)))
-    val partialCols: Seq[Column] = aggs.toSeq.map {
-      case (c, "sum")   => sum(col(c)).as(s"__p_$c")
-      case (c, "count") => count(col(c)).as(s"__p_$c")
-      case (c, "min")   => min(col(c)).as(s"__p_$c")
-      case (c, "max")   => max(col(c)).as(s"__p_$c")
-      case (c, other)   => throw new IllegalArgumentException(s"$other($c)")
-    }
-    val partial = salted.groupBy((keys.map(col) :+ col("__salt")): _*)
-      .agg(partialCols.head, partialCols.tail: _*)
-    val finalCols: Seq[Column] = aggs.toSeq.map {
-      case (c, "sum")   => sum(col(s"__p_$c")).as(s"sum_$c")
-      case (c, "count") => sum(col(s"__p_$c")).as(s"count_$c")
-      case (c, "min")   => min(col(s"__p_$c")).as(s"min_$c")
-      case (c, "max")   => max(col(s"__p_$c")).as(s"max_$c")
-      case (c, other)   => throw new IllegalArgumentException(s"$other($c)")
-    }
-    partial.groupBy(keys.map(col): _*).agg(finalCols.head, finalCols.tail: _*)
-  }
 
   /**
    * Salted join for hot keys: replicate each right-side row `salts` times

@@ -127,14 +127,10 @@ object WhisperIO {
         conf
     }
 
-  /** Extract paths from reader options: single `path` or JSON `paths` array
-   * (DataFrameReader.load(paths*) passes the latter). Globs and directories
-   * are expanded; directories pick up `*.wsp` / `*.wsp.gz`. */
-  def resolvePaths(map: CaseInsensitiveStringMap): Seq[String] =
-    expandPatterns(rawPatterns(map))
-
-  /** The user-supplied path patterns, un-expanded (the streaming source
-   * re-expands them per micro-batch to pick up newly written files). */
+  /** The user-supplied path patterns, un-expanded: a single `path` or a
+   * JSON `paths` array (DataFrameReader.load(paths*) passes the latter). The
+   * streaming source re-expands them per micro-batch to pick up newly
+   * written files. */
   def rawPatterns(map: CaseInsensitiveStringMap): Seq[String] = {
     val raw = mutable.ArrayBuffer[String]()
     Option(map.get("paths")).foreach { json =>

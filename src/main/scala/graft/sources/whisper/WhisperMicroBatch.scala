@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.StructType
  * `lastOffset < timestamp <= latestOffset`, where `latestOffset` advances to
  * the driver clock at each trigger (the same model as Graphite's own
  * write-behind: a slot for time T is final once T has passed). The time-range
- * predicate is pushed into the same partition reader the batch scan uses, so
- * a micro-batch reads only the ring-buffer slots in its window — not the file.
+ * predicate is pushed into the same columnar reader the batch scan uses
+ * ([[WhisperReaderFactory]]), so a micro-batch reads only the ring-buffer
+ * slots in its window — not the file.
  *
  * The reference has no streaming surface at all (`whisper_pandas.ipynb:1382`
  * leaves write/update as a TODO); this is the Spark-native extension of its
@@ -275,8 +276,10 @@ class WhisperMicroBatchStream(
     planned
   }
 
+  /** The batch scan's factory; it reads each [[WhisperStreamPartition]] with
+   * the partition's window added to the pushed predicates. */
   override def createReaderFactory(): PartitionReaderFactory =
-    new WhisperStreamReaderFactory(options, preds, requiredSchema)
+    new WhisperReaderFactory(options, preds, requiredSchema)
 
   override def stop(): Unit = {}
 }
@@ -288,21 +291,3 @@ final case class WhisperStreamPartition(base: WhisperInputPartition, lo: Long, h
 /** A bin of small units plus the shared micro-batch window. */
 final case class WhisperStreamMultiPartition(units: Array[WhisperInputPartition], lo: Long, hi: Long)
   extends InputPartition
-
-/** Appends the partition's time window to the pushed predicates and reuses
- * the batch partition reader — the window prunes during decode. */
-class WhisperStreamReaderFactory(
-    options: WhisperOptions,
-    preds: Seq[WPred],
-    requiredSchema: StructType
-) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition) = partition match {
-    case p: WhisperStreamPartition =>
-      val windowPreds = Seq(NumCmp("timestamp", ">", p.lo), NumCmp("timestamp", "<=", p.hi))
-      new WhisperPartitionReader(p.base, options, preds ++ windowPreds, requiredSchema)
-    case m: WhisperStreamMultiPartition =>
-      val windowPreds = Seq(NumCmp("timestamp", ">", m.lo), NumCmp("timestamp", "<=", m.hi))
-      new WhisperSequentialReader[org.apache.spark.sql.catalyst.InternalRow](
-        m.units, u => new WhisperPartitionReader(u, options, preds ++ windowPreds, requiredSchema))
-  }
-}

@@ -10,6 +10,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  *
  *  - `dropTimeZero` (default true): drop never-filled ring slots (timestamp 0).
  *  - `toDatetime`   (default true): timestamp as TimestampType (UTC) vs raw int seconds.
+ *                   `false` makes no ordering claim: the int column reads
+ *                   seconds past 2^31 as negative, so Spark sorts it itself.
  *  - `timeSort`     (default true): emit each archive in chronological order
  *                   (the ring buffer is physically rotated).
  *  - `dtype`        (default "double"): value column type, "double" | "float".
@@ -39,7 +41,6 @@ final case class WhisperOptions(
     dtype: String,
     compression: String,
     maxPointsPerSplit: Long,
-    vectorized: Boolean,
     streamStartTimestamp: Long,
     streamNowOverride: Long,
     binThreshold: Int = 128,
@@ -229,7 +230,6 @@ object WhisperOptions {
     dtype = map.getOrDefault("dtype", "double").toLowerCase,
     compression = map.getOrDefault("compression", "infer").toLowerCase,
     maxPointsPerSplit = map.getLong("maxPointsPerSplit", 8L * 1000 * 1000),
-    vectorized = map.getBoolean("vectorized", true),
     // streaming only: deliver points with timestamp > this at the first batch
     streamStartTimestamp = map.getLong("streamStartTimestamp", 0L),
     // streaming only: frozen "now" for deterministic tests (-1 = wall clock)

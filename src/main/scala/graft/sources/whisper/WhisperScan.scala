@@ -6,11 +6,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions => ExpressionsV2, SortDirection => SortDirectionV2, SortOrder => SortOrderV2}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.format.WhisperCodec
@@ -43,7 +43,10 @@ import graft.format.WhisperCodec
  *    indices of surviving records, and column vectors fill straight from the
  *    records, so a partition holds its 12-byte records plus 4 B per kept row
  *    (nothing extra when every record is kept). Gzip partitions hold only
- *    the kept records, copied out of a bounded stream chunk.
+ *    the kept records, copied out of a bounded stream chunk;
+ *  - one reader: every partition, of a batch scan or a streaming
+ *    micro-batch, decodes into ColumnarBatches ([[WhisperReaderFactory]],
+ *    [[WhisperColumnarReader]]), like the reference's single decode path.
  */
 final case class WhisperInputPartition(
     filePath: String,
@@ -282,10 +285,16 @@ class WhisperScan(
    * once bin-packing merges several archives into one partition: the units
    * are emitted sequentially and their time ranges overlap across files. */
   override def outputOrdering(): Array[SortOrderV2] =
-    if (options.timeSort && requiredSchema.fieldNames.contains("timestamp") &&
-        plannedPartitions.forall(_.isInstanceOf[WhisperInputPartition]))
+    if (ordersTimestamp && plannedPartitions.forall(_.isInstanceOf[WhisperInputPartition]))
       Array(ExpressionsV2.sort(ExpressionsV2.column("timestamp"), SortDirectionV2.ASCENDING))
     else Array.empty
+
+  /** Emission order is unsigned-seconds order. Only the TimestampType column
+   * (`toDatetime`) sorts that way: its micros are never negative. The INT
+   * column (`toDatetime=false`) reads seconds past 2^31 as negative, so a
+   * ring straddling 2^31 emits it out of signed order — no claim there. */
+  private def ordersTimestamp: Boolean =
+    options.timeSort && options.toDatetime && requiredSchema.fieldNames.contains("timestamp")
 
   /** Is the CONCATENATION of the planned partitions, in partition-index
    * order, globally ascending by timestamp? True for a single sorted
@@ -297,7 +306,7 @@ class WhisperScan(
    * this together with [[withWindowEnforcement]] so the multi-chunk claim
    * is runtime-checked, never trusted. */
   def globallyOrderedPartitions: Boolean = {
-    if (!options.timeSort || !requiredSchema.fieldNames.contains("timestamp")) false
+    if (!ordersTimestamp) false
     else {
       val ps = plannedPartitions
       if (ps.length == 1 && ps.head.isInstanceOf[WhisperInputPartition]) true
@@ -664,44 +673,52 @@ private[whisper] object RingProbe {
   }
 }
 
+/** The one reader factory of the whisper source, for batch scans and
+ * streaming micro-batches alike. Every partition is read columnar: decode
+ * goes straight into column vectors, and Spark's ColumnarToRow +
+ * whole-stage codegen consume the batch in a tight loop (same fast path as
+ * parquet). A micro-batch partition adds its `(lo, hi]` window to the pushed
+ * predicates, so the window prunes during decode. */
 class WhisperReaderFactory(
     options: WhisperOptions,
     preds: Seq[WPred],
     requiredSchema: StructType,
     enforceWindows: Boolean = false)
     extends PartitionReaderFactory {
+
+  /** Never called: Spark builds a row reader only for partitions that do not
+   * support columnar reads, and an empty micro-batch plans no partitions. */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("whisper partitions are read columnar only")
+
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     partition match {
-      case m: WhisperMultiPartition =>
-        new WhisperSequentialReader[InternalRow](
-          m.units, u => new WhisperPartitionReader(u, options, preds, requiredSchema, enforceWindows))
-      case p: WhisperInputPartition =>
-        new WhisperPartitionReader(p, options, preds, requiredSchema, enforceWindows)
+      case m: WhisperMultiPartition       => sequential(m.units, preds)
+      case p: WhisperInputPartition       => reader(p, preds)
+      case m: WhisperStreamMultiPartition => sequential(m.units, preds ++ window(m.lo, m.hi))
+      case p: WhisperStreamPartition      => reader(p.base, preds ++ window(p.lo, p.hi))
     }
 
-  /** Columnar reads: decode straight into column vectors — no per-row
-   * InternalRow materialization; Spark's ColumnarToRow + whole-stage codegen
-   * consume the batch in a tight loop (same fast path as parquet). */
-  override def supportColumnarReads(partition: InputPartition): Boolean = options.vectorized
+  private def window(lo: Long, hi: Long): Seq[WPred] =
+    Seq(NumCmp("timestamp", ">", lo), NumCmp("timestamp", "<=", hi))
 
-  override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    partition match {
-      case m: WhisperMultiPartition =>
-        new WhisperSequentialReader[org.apache.spark.sql.vectorized.ColumnarBatch](
-          m.units, u => new WhisperColumnarReader(u, options, preds, requiredSchema, enforceWindows))
-      case p: WhisperInputPartition =>
-        new WhisperColumnarReader(p, options, preds, requiredSchema, enforceWindows)
-    }
+  private def reader(u: WhisperInputPartition, ps: Seq[WPred]): PartitionReader[ColumnarBatch] =
+    new WhisperColumnarReader(u, options, ps, requiredSchema, enforceWindows)
+
+  private def sequential(units: Array[WhisperInputPartition], ps: Seq[WPred]): PartitionReader[ColumnarBatch] =
+    new WhisperSequentialReader(units, reader(_, ps))
 }
 
 /** Drains one inner reader per unit, in order; a unit's reader is built
  * lazily so at most one unit's decode buffer is live at a time. */
-class WhisperSequentialReader[T](
+class WhisperSequentialReader(
     units: Array[WhisperInputPartition],
-    mk: WhisperInputPartition => PartitionReader[T]
-) extends PartitionReader[T] {
+    mk: WhisperInputPartition => PartitionReader[ColumnarBatch]
+) extends PartitionReader[ColumnarBatch] {
   private val it = units.iterator
-  private var cur: PartitionReader[T] = _
+  private var cur: PartitionReader[ColumnarBatch] = _
 
   override def next(): Boolean = {
     while (true) {
@@ -716,7 +733,7 @@ class WhisperSequentialReader[T](
     false // unreachable
   }
 
-  override def get(): T = cur.get()
+  override def get(): ColumnarBatch = cur.get()
 
   override def close(): Unit = if (cur != null) { cur.close(); cur = null }
 }
@@ -967,18 +984,23 @@ private[whisper] object WhisperDecode {
   }
 }
 
-/** Columnar reader: emits ColumnarBatches of up to `BatchSize` rows, filled
- * straight from the partition's records; `file` and `archive` are set once
- * per partition as constant vectors. */
+/** Executor-side reader for one (file, archive[, chunk]). It decodes the
+ * 12-byte big-endian records (`whisper_pandas.py:31,178-184`), applies
+ * dropTimeZero (`:214-215`) and the pushed predicates during decode, and
+ * restores chronological order by ring rotation (vs the reference's full
+ * sort, `:231-232`); truncated files stop cleanly at EOF
+ * (`test_whisper_pandas.py:100-103`). It emits ColumnarBatches of up to
+ * `BatchSize` rows, filled straight from the partition's records; `file`
+ * and `archive` are set once per partition as constant vectors. */
 class WhisperColumnarReader(
     part: WhisperInputPartition,
     options: WhisperOptions,
     preds: Seq[WPred],
     requiredSchema: StructType,
     enforceWindows: Boolean = false
-) extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+) extends PartitionReader[ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
-  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
+  import org.apache.spark.sql.vectorized.ColumnVector
 
   private val BatchSize = 4096
   private val d = WhisperDecode.load(part, options, preds, enforceWindows)
@@ -1037,66 +1059,4 @@ class WhisperColumnarReader(
 
   override def get(): ColumnarBatch = batch
   override def close(): Unit = batch.close()
-}
-
-/**
- * Executor-side reader for one (file, archive[, chunk]).
- *
- * Decodes the 12-byte big-endian records (`whisper_pandas.py:31,178-184`),
- * applies dropTimeZero (`:214-215`) and pushed predicates during decode, then
- * restores chronological order by ring rotation (vs the reference's full sort,
- * `:231-232`). Truncated files stop cleanly at EOF (`test_whisper_pandas.py:100-103`).
- */
-class WhisperPartitionReader(
-    part: WhisperInputPartition,
-    options: WhisperOptions,
-    preds: Seq[WPred],
-    requiredSchema: StructType,
-    enforceWindows: Boolean = false
-) extends PartitionReader[InternalRow] {
-
-  private val d = WhisperDecode.load(part, options, preds, enforceWindows)
-  private var rowIdx = -1
-
-  private val fieldWriters: Array[(GenericInternalRow, Int, Int) => Unit] =
-    requiredSchema.fields.map { f =>
-      f.name match {
-        case "file" =>
-          val u = UTF8String.fromString(part.filePath)
-          (row: GenericInternalRow, out: Int, i: Int) => row.update(out, u)
-        case "archive" =>
-          (row: GenericInternalRow, out: Int, i: Int) => row.setInt(out, part.archiveIndex)
-        case "position" =>
-          (row: GenericInternalRow, out: Int, s: Int) => row.setLong(out, d.position(s))
-        case "timestamp" =>
-          if (options.toDatetime)
-            (row: GenericInternalRow, out: Int, s: Int) => row.setLong(out, d.timestamp(s) * 1000000L)
-          else
-            (row: GenericInternalRow, out: Int, s: Int) => row.setInt(out, d.timestamp(s).toInt)
-        case "value" =>
-          if (options.dtype == "float")
-            (row: GenericInternalRow, out: Int, s: Int) => row.setFloat(out, d.value(s).toFloat)
-          else
-            (row: GenericInternalRow, out: Int, s: Int) => row.setDouble(out, d.value(s))
-      }
-    }
-
-  private val row = new GenericInternalRow(requiredSchema.length)
-
-  override def next(): Boolean = {
-    rowIdx += 1
-    rowIdx < d.nRows
-  }
-
-  override def get(): InternalRow = {
-    val s = d.slot(rowIdx)
-    var f = 0
-    while (f < fieldWriters.length) {
-      fieldWriters(f)(row, f, s)
-      f += 1
-    }
-    row
-  }
-
-  override def close(): Unit = {}
 }

@@ -10,12 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.AnnIndex
 
 /**
- * Pins the scale property VERDICT r2 flagged: [[AnnIndex.lshSearch]] must
- * PRUNE to the probed buckets, not scan the corpus with a cheap predicate.
- * The probe set is a literal IN-list, so on a parquet-backed index the
- * filter must appear in the scan's PushedFilters (row-group stats prune;
- * a bucketBy/partitionBy layout prunes whole buckets/directories the same
- * way) — and the result must equal the old full-scan `bit_count` filter.
+ * Pins the scale property VERDICT r2 flagged: an ANN search must PRUNE to
+ * the probed buckets, not scan the corpus with a cheap predicate.
+ * [[AnnIndex.ivfSearch]]'s probe set is a literal IN-list, so on a
+ * bucket-partitioned layout the scan reads only the probed directories.
  */
 class AnnPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -47,99 +45,6 @@ class AnnPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     rec(plan)
     out.toSeq
-  }
-
-  test("probeBuckets enumerates exactly the Hamming ball") {
-    val ids = AnnIndex.probeBuckets(center = 0b1010L, nPlanes = 8, probeBits = 2)
-    assert(ids.size == 1 + 8 + 28) // C(8,0)+C(8,1)+C(8,2)
-    assert(ids.distinct.size == ids.size)
-    assert(ids.forall(b => java.lang.Long.bitCount(b ^ 0b1010L) <= 2))
-    assert(ids.contains(0b1010L))
-  }
-
-  test("lshSearch pushes the probe IN-list into the parquet scan") {
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("emb"))
-    val planes = AnnIndex.hyperplanes(nPlanes = 8, dim = 64, seed = 42L)
-    val idx = java.nio.file.Files.createTempDirectory("ann-prune").resolve("idx").toString
-    AnnIndex.lshBucketize(e, "emb", planes).write.mode("overwrite").parquet(idx)
-    val indexed = spark.read.parquet(idx)
-    val qVec = e.filter(col("vec_id") === 0).head().getSeq[Double](1).toArray
-
-    val res = AnnIndex.lshSearch(indexed, "emb", qVec, planes, k = 5, probeBits = 1)
-    res.collect()
-    val scan = scans(res.queryExecution.executedPlan)
-      .find(_.output.exists(_.name == "bucket"))
-      .getOrElse(fail("no parquet scan of the index in the search plan"))
-    val pushed = scan.metadata.getOrElse("PushedFilters", "")
-    assert(pushed.contains("bucket"), s"probe filter not pushed to the scan: $pushed")
-
-    // pruned search ≡ the old full-corpus bit_count filter (same rows)
-    val qb = AnnIndex.queryBucket(qVec, planes)
-    val full = indexed.filter(expr(s"bit_count(bucket ^ $qb) <= 1"))
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val pruned = indexed
-      .filter(col("bucket").isin(AnnIndex.probeBuckets(qb, planes.length, 1): _*))
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(pruned == full, "probe IN-list selects different rows than the Hamming predicate")
-  }
-
-  test("on a bucket-partitioned layout the search reads ONLY probed directories") {
-    // the 100 TB layout: partitionBy("bucket") turns the probe IN-list into
-    // directory-level partition pruning — the scan's file list, not just its
-    // row-group filter, shrinks to the probe set
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("emb"))
-    val planes = AnnIndex.hyperplanes(nPlanes = 6, dim = 64, seed = 42L)
-    val idx = java.nio.file.Files.createTempDirectory("ann-part").resolve("idx").toString
-    AnnIndex.lshBucketize(e, "emb", planes).write.partitionBy("bucket").mode("overwrite").parquet(idx)
-    val indexed = spark.read.parquet(idx)
-    val qVec = e.filter(col("vec_id") === 0).head().getSeq[Double](1).toArray
-
-    val res = AnnIndex.lshSearch(indexed, "emb", qVec, planes, k = 5, probeBits = 1)
-    res.collect()
-    val scan = scans(res.queryExecution.executedPlan)
-      .find(_.output.exists(_.name == "bucket"))
-      .getOrElse(fail("no parquet scan of the partitioned index"))
-    val probed = AnnIndex.probeBuckets(
-      AnnIndex.queryBucket(qVec, planes), planes.length, 1).toSet
-    // bucket ids of the directories the scan actually selected, parsed from
-    // the hive-style partition path segment of each selected file
-    val read = scan.selectedPartitions.toPartitionArray
-      .flatMap(pf => "bucket=(-?\\d+)".r.findFirstMatchIn(pf.filePath.toString).map(_.group(1).toLong))
-      .toSet
-    assert(read.subsetOf(probed), s"scan read non-probed buckets: ${read -- probed}")
-    assert(read.size <= probed.size && read.nonEmpty,
-      s"expected <= ${probed.size} partition dirs, read ${read.size}")
-  }
-
-  test("directory pruning survives a probe set ABOVE the parquet IN-threshold") {
-    // 16 planes + probeBits=2 -> 137 probe ids, far above
-    // spark.sql.parquet.pushdown.inFilterThreshold (default 10). Parquet
-    // ROW-GROUP pushdown degrades to a min/max range there (the XOR ball
-    // spans nearly the whole id domain), but catalog-level PARTITION pruning
-    // is threshold-independent — this pins the documented 100 TB config on
-    // the layout that actually carries it.
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("emb"))
-    val planes = AnnIndex.hyperplanes(nPlanes = 16, dim = 64, seed = 42L)
-    val idx = java.nio.file.Files.createTempDirectory("ann-part-big").resolve("idx").toString
-    AnnIndex.lshBucketize(e, "emb", planes).write.partitionBy("bucket").mode("overwrite").parquet(idx)
-    val indexed = spark.read.parquet(idx)
-    val qVec = e.filter(col("vec_id") === 0).head().getSeq[Double](1).toArray
-
-    val res = AnnIndex.lshSearch(indexed, "emb", qVec, planes, k = 5, probeBits = 2)
-    res.collect()
-    val scan = scans(res.queryExecution.executedPlan)
-      .find(_.output.exists(_.name == "bucket"))
-      .getOrElse(fail("no parquet scan of the partitioned index"))
-    val probed = AnnIndex.probeBuckets(
-      AnnIndex.queryBucket(qVec, planes), planes.length, 2).toSet
-    assert(probed.size == 137)
-    val read = scan.selectedPartitions.toPartitionArray
-      .flatMap(pf => "bucket=(-?\\d+)".r.findFirstMatchIn(pf.filePath.toString).map(_.group(1).toLong))
-      .toSet
-    assert(read.subsetOf(probed), s"scan read non-probed buckets: ${read -- probed}")
   }
 
   test("IVF: a bucket-partitioned assigned table prunes to the probed inverted lists") {

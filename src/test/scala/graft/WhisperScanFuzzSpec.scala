@@ -22,7 +22,7 @@ import graft.format.WhisperWriter.{ArchiveSpec, FileSpec}
  * closes the remaining gap (VERDICT r7 #6): codec->connector, across random
  * (archive count, sizes, rotation, fill, timestamp era, out-of-era residue,
  * truncation point, gzip) x (dropTimeZero, timeSort, toDatetime, dtype,
- * vectorized, maxPointsPerSplit) configurations, including pushdown-vs-post-filter
+ * maxPointsPerSplit) configurations, including pushdown-vs-post-filter
  * equality and each partition's emission order.
  *
  * Determinism: one fixed seed; every generated config is reproducible and the
@@ -56,7 +56,6 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       timeSort: Boolean,
       toDatetime: Boolean,
       dtype: String,
-      vectorized: Boolean,
       maxPointsPerSplit: Long
   )
 
@@ -98,15 +97,13 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (!gz && rnd.nextInt(5) == 0)
         Some((headerSize + rnd.nextLong(totalSize - headerSize + 1)).toInt)
       else None
-    Cfg(
-      spec, residue, gz, trunc,
-      dropTimeZero = rnd.nextBoolean(),
-      timeSort = rnd.nextBoolean(),
-      toDatetime = rnd.nextBoolean(),
-      dtype = if (rnd.nextBoolean()) "double" else "float",
-      vectorized = rnd.nextBoolean(),
-      maxPointsPerSplit = if (rnd.nextBoolean()) 1L << 23 else 64L + rnd.nextInt(512)
-    )
+    val dropTimeZero = rnd.nextBoolean()
+    val timeSort = rnd.nextBoolean()
+    val toDatetime = rnd.nextBoolean()
+    val dtype = if (rnd.nextBoolean()) "double" else "float"
+    rnd.nextBoolean() // the draw of a retired config field: keeps the seeded configs unchanged
+    Cfg(spec, residue, gz, trunc, dropTimeZero, timeSort, toDatetime, dtype,
+      maxPointsPerSplit = if (rnd.nextBoolean()) 1L << 23 else 64L + rnd.nextInt(512))
   }
 
   /** The file's (uncompressed) bytes: the written rings, residue patched
@@ -154,13 +151,12 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The scan's rows, each partition's in emission order, keyed by
    * partition id. */
-  private def scanPartitions(cfg: Cfg, path: Path, vectorized: Boolean): Seq[(Int, Seq[(Int, Long, Long, Long)])] = {
+  private def scanPartitions(cfg: Cfg, path: Path): Seq[(Int, Seq[(Int, Long, Long, Long)])] = {
     val df = spark.read.format("whisper")
       .option("dropTimeZero", cfg.dropTimeZero.toString)
       .option("timeSort", cfg.timeSort.toString)
       .option("toDatetime", cfg.toDatetime.toString)
       .option("dtype", cfg.dtype)
-      .option("vectorized", vectorized.toString)
       .option("maxPointsPerSplit", cfg.maxPointsPerSplit.toString)
       .load(path.toString)
     val rows = df.select(spark_partition_id(), col("*")).collect().toSeq.map { r =>
@@ -174,9 +170,6 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     rows.map(_._1).distinct.map(p => p -> rows.collect { case (`p`, row) => row })
   }
-
-  private def scanRows(cfg: Cfg, path: Path): Seq[(Int, Long, Long, Long)] =
-    scanPartitions(cfg, path, cfg.vectorized).flatMap(_._2)
 
   /** Number of descents in one archive's kept timestamps, in ring order. */
   private def descents(rows: Seq[(Int, Long, Long, Long)]): Int =
@@ -358,7 +351,7 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         .getOrCreate()
       def read(extra: (String, String)*) = {
         val base = s2.read.format("whisper")
-          .option("dropTimeZero", "true").option("toDatetime", "false")
+          .option("dropTimeZero", "true")
           .option("maxPointsPerSplit", "2048")
         extra.foldLeft(base)((r, kv) => r.option(kv._1, kv._2)).load(path.toString)
       }
@@ -375,11 +368,38 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       // the named escape hatch: one ordered partition, real full sort result
       val hatch = read("orderedSplit" -> "false").orderBy("timestamp")
       assert(hatch.rdd.getNumPartitions == 1)
-      val hts = hatch.select("timestamp").collect().map(_.getInt(0))
+      val hts = hatch.select("timestamp").collect().map(_.getTimestamp(0).getTime)
       assert(hts.length == points && (hts sameElements hts.sorted))
     } finally {
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("INT timestamps across 2^31: orderBy and sortWithinPartitions sort signed") {
+    // toDatetime=false holds the u32 seconds as a signed int, so seconds past
+    // 2^31 read as negative and the ring's chronological emission order is
+    // not the column's order. The scan must not claim timestamp order there,
+    // or Spark drops the sort and returns unsigned order.
+    val path = dir.resolve("straddle.wsp")
+    WhisperWriter.writeFile(path, FileSpec(archives = Seq(
+      ArchiveSpec(1, 4000, filled = 4000, lastTimestamp = (1L << 31) + 500, rotation = 1234))))
+    Seq(1L << 23, 512L).foreach { mpps =>
+      val df = spark.read.format("whisper")
+        .option("toDatetime", "false").option("maxPointsPerSplit", mpps.toString)
+        .load(path.toString).select("timestamp")
+      val ctx = s"maxPointsPerSplit=$mpps"
+      val want = df.collect().map(_.getInt(0)).sorted.toSeq
+      assert(want.head < 0 && want.last > 0, s"$ctx ring does not straddle 2^31")
+      def check(what: String, got: Seq[Int], expected: Seq[Int]): Unit =
+        if (got != expected)
+          fail(s"$ctx $what starts ${got.take(3)}, signed order starts ${expected.take(3)}")
+      check("orderBy", df.orderBy("timestamp").collect().map(_.getInt(0)).toSeq, want)
+      val perPartition = df.sortWithinPartitions("timestamp")
+        .select(spark_partition_id(), col("timestamp")).collect()
+        .groupBy(_.getInt(0)).values.map(_.map(_.getInt(1)).toSeq).toSeq
+      perPartition.foreach(ts => check("sortWithinPartitions", ts, ts.sorted))
+      check("sortWithinPartitions content", perPartition.flatten.sorted, want)
     }
   }
 
@@ -392,22 +412,21 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val path = dir.resolve(s"fuzz$i.wsp" + (if (cfg.gz) ".gz" else ""))
       writeFile(cfg, path)
       val expected = referenceRows(cfg)
-      val actual = scanRows(cfg, path)
+      val partitions = scanPartitions(cfg, path)
+      val actual = partitions.flatMap(_._2)
       val ctx = s"config #$i: $cfg"
       assert(actual.size == expected.size, s"$ctx row count ${actual.size} != ${expected.size}")
       assert(actual.sorted == expected.sorted, s"$ctx content mismatch")
       if (expected.exists(_._3 >= (1L << 31))) past2038 += 1
       if (expected.groupBy(_._1).values.exists(descents(_) > 1)) unsorted += 1
 
-      // emission order, both readers: each partition (one archive, or one
-      // chunk of it) in ring order, or with timeSort a stable sort of that
-      // by UNSIGNED timestamp
-      Seq(true, false).foreach { vectorized =>
-        scanPartitions(cfg, path, vectorized).foreach { case (pid, rows) =>
-          val ringOrder = rows.sortBy(r => (r._1, r._2))
-          val want = if (cfg.timeSort) ringOrder.sortBy(_._3) else ringOrder
-          assert(rows == want, s"$ctx vectorized=$vectorized partition $pid emission order")
-        }
+      // emission order: each partition (one archive, or one chunk of it) in
+      // ring order, or with timeSort a stable sort of that by UNSIGNED
+      // timestamp
+      partitions.foreach { case (pid, rows) =>
+        val ringOrder = rows.sortBy(r => (r._1, r._2))
+        val want = if (cfg.timeSort) ringOrder.sortBy(_._3) else ringOrder
+        assert(rows == want, s"$ctx partition $pid emission order")
       }
 
       // timeSort contract: within an archive (one scan partition, so collect
@@ -432,7 +451,6 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
           .option("toDatetime", cfg.toDatetime.toString)
           .option("timeSort", cfg.timeSort.toString)
           .option("dtype", cfg.dtype)
-          .option("vectorized", cfg.vectorized.toString)
           .option("maxPointsPerSplit", cfg.maxPointsPerSplit.toString)
           .load(path.toString)
         val filtered =

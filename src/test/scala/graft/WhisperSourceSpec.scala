@@ -221,8 +221,6 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = unbinned.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
     assert(a == b)
     assert(binned.count() == 200L * 120)
-    // row (non-vectorized) multi-unit path
-    assert(read(s"$many/*.wsp", Map("vectorized" -> "false")).count() == 200L * 120)
     // pushdown evaluates identically inside a bin
     val cut = to_timestamp(lit("2020-09-13 12:30:00"))
     assert(binned.filter(col("timestamp") >= cut).count() ==
@@ -241,19 +239,16 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // dropTimeZero=false keeps every slot, so each (file, archive) count is its header's points
     val fromHeaders = files.flatMap { case (name, m) => m.archives.map(a => (name, a.index) -> a.points) }.toMap
     def name(file: String) = file.substring(file.lastIndexOf('/') + 1)
-    Seq("true", "false").foreach { vectorized =>
-      val df = read(s"$tree/*",
-        Map("binThreshold" -> "1", "dropTimeZero" -> "false", "vectorized" -> vectorized))
-      assert(df.rdd.getNumPartitions < fromHeaders.size, "units were not bin-packed")
-      val counts = df.groupBy("file", "archive").count().collect()
-        .map(r => (name(r.getString(0)), r.getInt(1)) -> r.getLong(2)).toMap
-      assert(counts == fromHeaders, s"vectorized=$vectorized")
-      assert(df.select("file").distinct().count() == files.size.toLong)
-      // some task switches between units with different constants
-      val unitsPerTask = df.select(spark_partition_id().as("pid"), col("file"), col("archive"))
-        .distinct().groupBy("pid").count()
-      assert(unitsPerTask.filter(col("count") > 1).count() > 0)
-    }
+    val df = read(s"$tree/*", Map("binThreshold" -> "1", "dropTimeZero" -> "false"))
+    assert(df.rdd.getNumPartitions < fromHeaders.size, "units were not bin-packed")
+    val counts = df.groupBy("file", "archive").count().collect()
+      .map(r => (name(r.getString(0)), r.getInt(1)) -> r.getLong(2)).toMap
+    assert(counts == fromHeaders)
+    assert(df.select("file").distinct().count() == files.size.toLong)
+    // some task switches between units with different constants
+    val unitsPerTask = df.select(spark_partition_id().as("pid"), col("file"), col("archive"))
+      .distinct().groupBy("pid").count()
+    assert(unitsPerTask.filter(col("count") > 1).count() > 0)
   }
 
   // --- pushdown & pruning (connector-specific) ---
@@ -285,15 +280,13 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
 
-  test("vectorized and row-based reads produce identical results") {
-    val vec = read(mini.toString).collect().map(_.toString).sorted
-    val row = read(mini.toString, Map("vectorized" -> "false")).collect().map(_.toString).sorted
-    assert(vec.sameElements(row))
+  test("batch scan reads columnar: ColumnarToRow in the plan") {
     val plan = read(mini.toString).queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"), s"expected columnar path in:\n$plan")
   }
 
   test("streaming tail: first batch delivers history, next batch only new points") {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
     import org.apache.spark.sql.streaming.Trigger
     val swsp = dir.resolve("stream.wsp")
     val t0 = 1600000000L
@@ -313,6 +306,9 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination(120000)
+      // micro-batches decode through the batch scan's columnar reader
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan.toString
+      assert(plan.contains("ColumnarToRow"), s"expected columnar micro-batch in:\n$plan")
       spark.read.parquet(outDir).count()
     }
 

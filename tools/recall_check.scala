@@ -1,7 +1,6 @@
 // ANN recall check: recall@20 vs exact brute force at 1x/3x/10x sf0.1
-// embeddings, for the IVF (nprobe = 2/4/8 of 16 lists) and hyperplane-LSH
-// (nPlanes=16, probeBits = 1/2/3) search paths. Corpus replication matches
-// scale_check2.scala (distinct vec_ids, deterministic per-copy nudge), so
+// embeddings, for the IVF search path (nprobe = 2/4/8 of 16 lists). Corpus
+// replication matches scale_check2.scala (distinct vec_ids, deterministic per-copy nudge), so
 // the recall evidence scales alongside the cost evidence in BENCH_NOTES.md.
 // Run: /opt/spark/bin/spark-shell --master 'local[32]' \
 //        --jars target/scala-2.13/whisperpandasspark_2.13-0.1.0.jar \
@@ -42,18 +41,6 @@ for (k <- Seq(1, 3, 10)) {
     println(f"[recall] k=$k%2d ivf   nprobe=$nprobe%d recall@20=${(exact & got).size / 20.0}%.2f")
   }
   assigned.unpersist()
-
-  // LSH: sweep bucket-key width (nPlanes) and probe radius — recall is a
-  // function of neighbor similarity (Charikar collision bound), so the same
-  // config behaves very differently on weak-similarity KNN (k=1) vs
-  // true-near-dup retrieval (k=10, siblings at cos~1 dominate the top-20).
-  for (np <- Seq(8, 16); pb <- Seq(1, 2, 3)) {
-    val planes = AnnIndex.hyperplanes(nPlanes = np, dim = 64, seed = 42L)
-    val indexed = AnnIndex.lshBucketize(corpus, "emb", planes)
-    val got = topIds(AnnIndex.lshSearch(indexed, "emb", qv, planes, k = 20, probeBits = pb))
-    val frac = AnnIndex.probeBuckets(0L, np, pb).size.toDouble / (1L << np)
-    println(f"[recall] k=$k%2d lsh nPlanes=$np%2d probeBits=$pb%d hashFrac=${frac}%.3f recall@20=${(exact & got).size / 20.0}%.2f")
-  }
   e.unpersist()
 }
 sys.exit(0)
