@@ -414,56 +414,27 @@ object DedupOps {
    * ONE clustering pass per (session, corpus) instead of each re-running the
    * iterative propagation loop — the most expensive lineage in the inventory
    * (~1.4 s at sf0.1). The `docTermTable` pattern applied to it: the result
-   * is pinned through [[OpCache.persistBounded]] (slot `q60_labels`, so a
-   * long-lived session holds at most ONE label table and `releaseAll` /
-   * `clearCache` release it), and the DataFrame itself is memoized per
-   * (session, dir) because the loop runs DRIVER-SIDE actions — a cache-level
-   * pin alone could not stop a second call from re-iterating.
+   * is pinned and memoized per (session, dir) (slot `q60_labels`, so a
+   * long-lived session holds at most ONE label table and `releaseAll`
+   * releases it): the loop runs DRIVER-SIDE actions, so a cache-level pin
+   * alone could not stop a second call from re-iterating.
    *
-   * After a `clearCache()` the memoized frame re-pins lazily and recomputes
-   * its (deterministic) lineage on next use — correct, just unshared again
-   * until materialized. STALENESS HAZARD, same trade as VectorOps' ivfIndex
-   * memo: keyed by `dir` with no file-mtime check; a harness that REWRITES
-   * documents parquet under a dir in-place must call
-   * [[invalidateClusterCache]] (the bench does, so every timed run prices
-   * the full clustering honestly).
+   * It is an [[OpCache.pinned]] entry: after a `clearCache()` the next call
+   * rebuilds it (the loop's generations are localCheckpoint'd for lineage
+   * truncation, so the dropped frame has no recomputable lineage to
+   * re-pin). The bench releases it between timed runs
+   * ([[OpCache.releaseAll]]) so every timed run prices the full clustering
+   * honestly.
    */
-  // r15: SessionMemo, not a raw CHM — stopped sessions release entries,
-  // identity-hash collisions cannot serve another session's frame, and
-  // newSession-cycling JVMs are bounded by the memo cap (VERDICT r14 #2).
-  private val clusterLabelCache = new SessionMemo()
+  private[operators] def clusterLabelTable(spark: SparkSession, dir: String): DataFrame =
+    OpCache.pinned(spark, "q60_labels", dir)(computeClusterLabels(spark, dir))
 
-  /** Drop every memoized cluster-label table (all sessions, all dirs). */
-  def invalidateClusterCache(): Unit = clusterLabelCache.clear()
+  /** Release every cluster-label table (all sessions, all dirs), with
+   * [[OpCache.releaseAll]]'s contract. */
+  def invalidateClusterCache(): Unit = OpCache.release("q60_labels")
 
-  /** Drop the memoized label tables for one corpus dir (any session). */
-  def invalidateClusterCache(dir: String): Unit = clusterLabelCache.clearDir(dir)
-
-  /** Entry count for the session-lifecycle spec. */
-  private[graft] def labelCacheSize: Int = clusterLabelCache.size
-
-  private[operators] def clusterLabelTable(spark: SparkSession, dir: String): DataFrame = {
-    // get + putIfAbsent, not a build under the memo lock: the miss path runs
-    // Spark jobs (the propagation loop's convergence counts) — the CHM
-    // bin-lock pitfall; a raced duplicate build is deterministic-identical.
-    val hit = clusterLabelCache.get(spark, dir)
-    if (hit != null) {
-      if (hit.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        // the pinned data was dropped (a clearCache between queries). r17:
-        // the loop's generations are localCheckpoint'd for lineage
-        // truncation, so the memoized frame has NO recomputable lineage —
-        // re-pinning it would throw "checkpoint block not found" on next
-        // use. Rebuild fresh and replace the memo entry instead (same cost
-        // the old full-lineage recompute paid, now explicit).
-        val rebuilt = computeClusterLabels(spark, dir)
-        clusterLabelCache.put(spark, dir, rebuilt)
-        rebuilt
-      } else hit
-    } else {
-      val labels = computeClusterLabels(spark, dir)
-      clusterLabelCache.putIfAbsent(spark, dir, labels)
-    }
-  }
+  /** Release the cluster-label tables of one corpus dir (any session). */
+  def invalidateClusterCache(dir: String): Unit = OpCache.release("q60_labels", dir)
 
   /** One run of the propagation loop; returns the pinned label table. */
   /** Min-label propagation over a PERSISTED bidirectional edge list
@@ -554,13 +525,11 @@ object DedupOps {
       .repartition(col("t"))
       .persist()
     val (labels, lastGen) = propagateMinLabels(edges)
-    // Pin the FINAL label table through the OpCache slot and materialize it
-    // while the loop's last generation is still cached (one O(nodes) copy
-    // action), then drop the loop's own persist: before r14 the final
-    // generation's plain persist outlived the call UNMANAGED — repeated
-    // dedupClusters calls accumulated one cached relation each, invisible
-    // to OpCache.releaseAll.
-    val pinned = OpCache.persistBounded("q60_labels", labels)
+    // Persist the FINAL label table (clusterLabelTable's OpCache entry owns
+    // its release) and materialize it while the loop's last generation is
+    // still cached (one O(nodes) copy action), then free the loop's own
+    // storage, which no registry entry tracks.
+    val pinned = labels.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     pinned.count()
     releaseCheckpoint(lastGen)
     edges.unpersist()

@@ -326,43 +326,15 @@ object MultimodalOps {
    * production the payloads live in storage and the decode stage reads
    * them; synthesizing 60k+ PNG/WAV payloads is fixture setup, not the
    * pipeline stage under test, so it must not ride inside the timed query
-   * (same memoization rationale as [[VectorOps]]'s IVF index). Staleness
-   * hazard, same trade as there: keyed by `dir` with no length/mtime check
-   * and no invalidation, so documents parquet rewritten in place within one
-   * JVM replays the stale payloads until the process exits.
-   *
-   * get + putIfAbsent, not computeIfAbsent: the miss path runs a Spark
-   * job, and a CHM mapping function that blocks both serializes same-bin
-   * keys and can trip the JDK "Recursive update" guard under concurrent
-   * callers (the r12 manifest/header-cache lesson). A raced duplicate
-   * materialization is idempotent; the loser's temp dir is DELETED, not
-   * abandoned (ADVICE r16: the leaked dir per lost race). */
-  private def storedFixture(
-      cache: java.util.concurrent.ConcurrentHashMap[String, String],
-      tag: String, dir: String)(build: => Dataset[Asset]): String = {
-    val hit = cache.get(dir)
-    if (hit != null) hit
-    else {
+   * (same memoization rationale as [[VectorOps]]'s IVF index). The path is
+   * an [[OpCache.perProcess]] entry under `tag`: built exactly once, and
+   * rebuilt into a fresh temp dir when the corpus dir's listing changes. */
+  private def storedFixture(spark: SparkSession, tag: String, dir: String)(build: => Dataset[Asset]): String =
+    OpCache.perProcess(spark, tag, dir) {
       val path = java.nio.file.Files.createTempDirectory(tag).toString
       build.write.mode("overwrite").parquet(path)
-      val prev = cache.putIfAbsent(dir, path)
-      if (prev != null) { deleteLocalDir(path); prev } else path
+      path
     }
-  }
-
-  /** Best-effort recursive delete of a local temp dir (the lost-race
-   * duplicate materialization — already unreferenced, so failure only
-   * costs disk until process exit). */
-  private def deleteLocalDir(path: String): Unit =
-    try {
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        val walk = java.nio.file.Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => }
 
   /** Read a stored fixture back SPREAD across the session's cores: the
    * fixture parquet is a couple of small files, so a plain read yields 1-2
@@ -378,12 +350,10 @@ object MultimodalOps {
       .as[Asset]
   }
 
-  private val videoAssetCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def videoAssetsStored(spark: SparkSession, dir: String): Dataset[Asset] = {
     import spark.implicits._
     readStored(spark,
-      storedFixture(videoAssetCache, "graft_video_assets", dir)(videoAssets(spark, dir)))
+      storedFixture(spark, "graft_video_assets", dir)(videoAssets(spark, dir)))
   }
 
   /** q86: REAL video frame sampling — read stored containers, seek past
@@ -1075,11 +1045,9 @@ object MultimodalOps {
   /** Pattern containers materialized to parquet ONCE per (process, dir) —
    * [[storedFixture]]'s rationale: the dedup stage under test READS stored
    * payloads; synthesizing ~25k PNG frames stays out of the timed query. */
-  private val videoPatternCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def videoPatternAssetsStored(spark: SparkSession, dir: String): Dataset[Asset] = {
     import spark.implicits._
-    readStored(spark, storedFixture(videoPatternCache, "graft_video_pattern_assets", dir) {
+    readStored(spark, storedFixture(spark, "graft_video_pattern_assets", dir) {
       t(spark, dir, "documents")
         .select(col("doc_id"))
         .as[Long]
@@ -1097,11 +1065,9 @@ object MultimodalOps {
    * one 32x32 block-pattern image per document, twins at doc_id % 50 == 1
    * painting the PREVIOUS document's pattern with 3 blocks flipped. The
    * timed stage is read + decode + hash + join, not PNG synthesis. */
-  private val imagePatternCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def imagePatternAssetsStored(spark: SparkSession, dir: String): Dataset[Asset] = {
     import spark.implicits._
-    readStored(spark, storedFixture(imagePatternCache, "graft_image_pattern_assets", dir) {
+    readStored(spark, storedFixture(spark, "graft_image_pattern_assets", dir) {
       t(spark, dir, "documents")
         .select(col("doc_id"))
         .as[Long]
@@ -1115,11 +1081,9 @@ object MultimodalOps {
 
   /** Amplitude-pattern WAV fixtures for q126, stored — same discipline;
    * twins at doc_id % 50 == 2 with 3 frame amplitudes flipped. */
-  private val audioPatternCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def audioPatternAssetsStored(spark: SparkSession, dir: String): Dataset[Asset] = {
     import spark.implicits._
-    readStored(spark, storedFixture(audioPatternCache, "graft_audio_pattern_assets", dir) {
+    readStored(spark, storedFixture(spark, "graft_audio_pattern_assets", dir) {
       t(spark, dir, "documents")
         .select(col("doc_id"))
         .as[Long]
@@ -1331,11 +1295,9 @@ object MultimodalOps {
 
   /** Staircase WAV fixtures for q130, stored — twins at doc_id % 50 == 4
    * replay the previous doc's signal time-shifted by 2 silent frames. */
-  private val audioLandmarkCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def audioLandmarkAssetsStored(spark: SparkSession, dir: String): Dataset[Asset] = {
     import spark.implicits._
-    readStored(spark, storedFixture(audioLandmarkCache, "graft_audio_landmark_assets", dir) {
+    readStored(spark, storedFixture(spark, "graft_audio_landmark_assets", dir) {
       t(spark, dir, "documents")
         .select(col("doc_id"))
         .as[Long]

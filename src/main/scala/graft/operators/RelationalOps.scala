@@ -9,24 +9,10 @@ object Tables {
   // re-lists the path and re-reads footers for schema inference on EVERY
   // call, a fixed per-query tax that a real deployment pays once at catalog
   // registration. A DataFrame is an immutable logical plan, so reuse across
-  // queries is safe; keyed on the session so test suites with their own
+  // queries is safe; session-scoped in OpCache so test suites with their own
   // sessions never share plans across stopped contexts.
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  // The whole lookup is under one lock (ADVICE r7): it makes build() evaluate
-  // exactly once per key (TrieMap.getOrElseUpdate may run the thunk in two
-  // racing threads), serializes the events nanosAsLong conf flip against any
-  // concurrent events build in the same session, and lets eviction run
-  // against a stable map. Contention is irrelevant at this call rate (a
-  // handful of lookups per query; the guarded section is a footer read).
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = Tables.synchronized {
-    // Lazy eviction: drop relations whose session's context has stopped, so
-    // the map is bounded by (live sessions x tables) instead of retaining
-    // every stopped test-suite session for the JVM lifetime (ADVICE r7).
-    cache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    cache.getOrElseUpdate((spark, dir, name), build(spark, dir, name))
-  }
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    OpCache.perSession(spark, "table/" + name, dir)(build(spark, dir, name))
 
   private def build(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {

@@ -400,71 +400,42 @@ object TextOps {
    * (doc_id, rank_bm25) relation, and the rank leg is the expensive one
    * (docTermTable corpus pass + globalRank's two-job prefix-offset
    * pattern) — so, like [[DedupOps.clusterLabelTable]], it is built ONCE
-   * per (session, corpus), OpCache-pinned, and memoized. Unlike the label
-   * memo there is NO re-pin path on a storage-dropped hit: the lineage
-   * contains [[OpCache.pinPartitions]]'s localCheckpoint, whose blocks an
-   * external cleanup (Bench dropState) can drop — a recompute through a
-   * truncated checkpoint fails, so a stale hit is REBUILT, never re-pinned.
-   * The bench invalidates this memo between timed runs
-   * (`invalidateBm25RankCache`) so every run prices the full rank lineage.
-   *
-   * r15: the raw `ConcurrentHashMap[identityHashCode:dir, frame]` became a
-   * [[SessionMemo]] — stopped sessions release their entries, identity-hash
-   * collisions cannot serve another session's frame, and a live JVM cycling
-   * `newSession()` is bounded by the memo cap (VERDICT r14 #2).
+   * per (session, corpus) as an [[OpCache.pinned]] entry. A storage-dropped
+   * hit is REBUILT, never re-pinned: the lineage contains
+   * [[OpCache.pinPartitions]]'s localCheckpoint, whose blocks an external
+   * cleanup (Bench dropState) can drop, and a recompute through a truncated
+   * checkpoint fails. The bench releases it between timed runs
+   * ([[OpCache.releaseAll]]) so every run prices the full rank lineage.
    */
-  private val bm25RankCache = new SessionMemo()
-
-  /** Drop BOTH retrieval rank memos — every memoized BM25 rank table AND
-   * every quality rank table (all sessions, all dirs). The two legs share
-   * one lifecycle deliberately: every caller of this hook (Bench dropState,
-   * the rebuild gates) means "price the full retrieval lineage again", and
-   * a BM25-only drop would leave q115 half-memoized, producing walls that
-   * are neither cold nor warm. */
-  def invalidateBm25RankCache(): Unit = { bm25RankCache.clear(); qualityRankCache.clear() }
-
-  /** Entry counts for the session-lifecycle spec. */
-  private[graft] def rankCacheSizes: (Int, Int) = (bm25RankCache.size, qualityRankCache.size)
-
-  private[graft] def bm25RankTable(spark: SparkSession, dir: String): DataFrame = {
-    val hit = bm25RankCache.get(spark, dir)
-    if (hit != null && hit.storageLevel != org.apache.spark.storage.StorageLevel.NONE) hit
-    else {
-      // get + put, not a build under the memo lock: the miss path runs Spark
-      // jobs (globalRank's offsets collect) — the CHM bin-lock pitfall; a
-      // raced duplicate build is deterministic-identical
-      val ranked = RelationalOps.globalRank(
+  private[graft] def bm25RankTable(spark: SparkSession, dir: String): DataFrame =
+    OpCache.pinned(spark, "bm25rank", dir) {
+      RelationalOps.globalRank(
           bm25Scores(spark, dir).select("doc_id", "score_ppm"),
           "rank_bm25", col("score_ppm").desc, col("doc_id"))
         .select(col("doc_id"), col("rank_bm25").cast("bigint").as("rank_bm25"))
-      val pinned = OpCache.persistBounded("bm25rank", ranked)
-      bm25RankCache.put(spark, dir, pinned)
-      pinned
     }
-  }
+
+  /** Release BOTH retrieval rank tables — every BM25 rank table AND every
+   * quality rank table (all sessions, all dirs), with [[OpCache.releaseAll]]'s
+   * contract. The two legs share one lifecycle deliberately: every caller
+   * of this hook (the benchmark's drop, the rebuild gates) means "price the full
+   * retrieval lineage again", and a BM25-only drop would leave q115
+   * half-memoized, producing walls that are neither cold nor warm. */
+  def invalidateBm25RankCache(): Unit = { OpCache.release("bm25rank"); OpCache.release("qualityrank") }
 
   /** Session-memoized corpus QUALITY rank table (ADVICE r14 / VERDICT r14
    * "What's missing" #3): [[rrfFusionCorpus]]'s prior leg is the same
    * two-job prefix-offset rank build as the BM25 leg — previously rebuilt
    * (and its localCheckpoint re-pinned) on EVERY call while the lexical leg
-   * was memoized. Same slot pattern and same rebuild-never-repin lifecycle
-   * as [[bm25RankTable]]: the lineage holds a localCheckpoint an external
-   * dropState may have truncated, so a storage-dropped hit is REBUILT. */
-  private val qualityRankCache = new SessionMemo()
-
-  private[operators] def qualityRankTable(spark: SparkSession, dir: String): DataFrame = {
-    val hit = qualityRankCache.get(spark, dir)
-    if (hit != null && hit.storageLevel != org.apache.spark.storage.StorageLevel.NONE) hit
-    else {
-      val ranked = RelationalOps.globalRank(
+   * was memoized. Same entry kind and same rebuild-never-repin lifecycle
+   * as [[bm25RankTable]]. */
+  private[operators] def qualityRankTable(spark: SparkSession, dir: String): DataFrame =
+    OpCache.pinned(spark, "qualityrank", dir) {
+      RelationalOps.globalRank(
           qualityScore(spark, dir).select("doc_id", "quality_score_k"),
           "rank_quality", col("quality_score_k").desc, col("doc_id"))
         .select(col("doc_id"), col("rank_quality").cast("bigint").as("rank_quality"))
-      val pinned = OpCache.persistBounded("qualityrank", ranked)
-      qualityRankCache.put(spark, dir, pinned)
-      pinned
     }
-  }
 
   def rrfFusionCorpus(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
     graft.functions.VectorFunctions.register(spark)

@@ -170,45 +170,17 @@ object VectorOps {
       centroids: Array[(Int, Array[Double])],
       queryVec: Array[Double],
       pqCodebook: Array[Array[Array[Long]]])
-  private val ivfCache = new java.util.concurrent.ConcurrentHashMap[String, IvfIndex]()
-  // bumped by invalidateIndexCache: a build that STARTED before an
-  // invalidation must not re-install its (stale) result after it — without
-  // this, remove() followed by the in-flight build's put would serve the
-  // old index forever (the computeIfAbsent form blocked remove() on the bin
-  // until the build finished; get+put needs the epoch to keep that ordering)
-  private val ivfEpoch = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** STALENESS HAZARD: the memoized index is keyed by `dir` only, with no
-   * file-mtime check — if the embeddings parquet under a dir is REWRITTEN
-   * within the same JVM, q75/q88/q92/q95/q99/q100 would silently search
-   * with stale centroids and a stale query vector. That is the intended
-   * trade (an ANN index is built once and amortized; rebuilding per query
-   * would dominate the search), but any harness that mutates a dir in-place
-   * must call [[invalidateIndexCache]] after the rewrite. */
-  def invalidateIndexCache(dir: String): Unit = {
-    ivfEpoch.incrementAndGet()
-    ivfCache.remove(dir)
-    regimeCache.remove(dir) // the measured regime is a property of the same corpus
-  }
+  /** Forget the memoized index and measured regime of `dir`, with
+   * [[OpCache.releaseAll]]'s contract. Not needed for correctness — both
+   * entries are rebuilt when the dir's listing changes — but it frees them
+   * and forces the next call to pay the build. */
+  def invalidateIndexCache(dir: String): Unit = { OpCache.release("ivf", dir); OpCache.release("regime", dir) }
 
-  private def ivfIndex(spark: SparkSession, dir: String): IvfIndex = {
-    // get + putIfAbsent, not computeIfAbsent: the miss path runs Spark
-    // jobs (centroid pulls), and a blocking CHM mapping function both
-    // serializes same-bin keys and can trip the JDK "Recursive update"
-    // guard under concurrent callers (r12 lesson); duplicate builds are
-    // deterministic-identical, so a race is harmless. The epoch check
-    // keeps invalidation ordering: a build straddling an invalidation is
-    // returned to ITS caller but never cached.
-    val hit = ivfCache.get(dir)
-    if (hit != null) return hit
-    val epoch = ivfEpoch.get()
-    val built = buildIvfIndex(spark, dir)
-    if (ivfEpoch.get() != epoch) built
-    else {
-      val prev = ivfCache.putIfAbsent(dir, built)
-      if (prev != null) prev else built
-    }
-  }
+  /** Built once per (process, dir) in [[OpCache]]; rebuilt when the
+   * dir's listing changes. */
+  private def ivfIndex(spark: SparkSession, dir: String): IvfIndex =
+    OpCache.perProcess(spark, "ivf", dir)(buildIvfIndex(spark, dir))
 
   private def buildIvfIndex(spark: SparkSession, dir: String): IvfIndex = {
     {
@@ -366,29 +338,22 @@ object VectorOps {
    * between the two measured points with margin on both sides.
    *
    * Cost: two corpus passes (exact + IVF legs), paid ONCE per (dir, JVM) —
-   * memoized alongside the index, invalidated by [[invalidateIndexCache]].
+   * memoized alongside the index in [[OpCache]], rebuilt with it when the
+   * dir changes.
    * This is a build-time measurement, not a per-query one; the explicit
    * `regime` overloads remain as the override for operators who know their
    * corpus.
    */
   final val RegimeThreshold = 0.75
 
-  private val regimeCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def calibrateRegime(spark: SparkSession, dir: String): String = {
-    // get + putIfAbsent (the measurement runs Spark jobs); epoch-guarded
-    // like the index build so an invalidation mid-measurement is honored
-    val hit = regimeCache.get(dir)
-    if (hit != null) return hit
-    val epoch = ivfEpoch.get()
-    val rows = annRecall(spark, dir, k = 10, nprobe = 4, panel = 8).collect()
-    val recall =
-      if (rows.isEmpty) 0.0
-      else rows.map(_.getAs[Double]("recall")).sum / rows.length
-    val regime = if (recall >= RegimeThreshold) "dense" else "weak"
-    if (ivfEpoch.get() == epoch) regimeCache.putIfAbsent(dir, regime)
-    regime
-  }
+  def calibrateRegime(spark: SparkSession, dir: String): String =
+    OpCache.perProcess(spark, "regime", dir) {
+      val rows = annRecall(spark, dir, k = 10, nprobe = 4, panel = 8).collect()
+      val recall =
+        if (rows.isEmpty) 0.0
+        else rows.map(_.getAs[Double]("recall")).sum / rows.length
+      if (recall >= RegimeThreshold) "dense" else "weak"
+    }
 
   def nprobeForRecall(targetRecall: Double, regime: String = "weak"): Int = {
     require(targetRecall > 0.0 && targetRecall <= 1.0,

@@ -12,14 +12,15 @@ import org.scalatest.funsuite.AnyFunSuite
 /**
  * Library sessions are shared: a notebook or service fires queries from
  * multiple threads at ONE SparkSession. The shared mutable surfaces this
- * exercises under real concurrency: the [[graft.operators.Tables]] relation
- * cache (locked build + lazy eviction), `VectorFunctions.register`'s
+ * exercises under real concurrency: every kind of [[graft.operators.OpCache]]
+ * entry — the session's `Tables` relations, the pinned cluster-label table
+ * (q60), the process-wide ANN index (q75/q88) and stored image fixture
+ * (q125), each built exactly once per key — plus `VectorFunctions.register`'s
  * temp-function registry writes (several operators re-register on every
  * call), the per-call `ivf_argmin_N` registrations (unique-name counter),
- * the memoized ANN index (`computeIfAbsent`), and the scoped
- * events-nanosAsLong conf flip. Equality against the serial run is the
- * assertion — a lost registration, a half-built relation, or a leaked conf
- * flip all surface as a wrong row set or an exception.
+ * and the scoped events-nanosAsLong conf flip. Equality against the serial
+ * run is the assertion — a lost registration, a half-built relation, or a
+ * leaked conf flip all surface as a wrong row set or an exception.
  */
 class ConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -36,12 +37,13 @@ class ConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // diverse shared-state footprint: parquet relations incl. events (conf
   // flip), registered kernels (minhash/char_ngrams/gram_hash20), the ANN
-  // index + per-call argmin registration, window functions, persist()
+  // index + per-call argmin registration, window functions, persist(), the
+  // pinned label table, the stored image fixture
   val names = Seq(
     "q01_tpch1_agg", "q20_text_tokens", "q25_dedup_minhash_lsh",
     "q26_dedup_ngram_jaccard", "q31_asof_join", "q50_sessionize",
-    "q75_ann_ivf_topk", "q88_semantic_dedup", "q89_bigram_surprisal",
-    "q93_substring_dup")
+    "q60_dedup_clusters", "q75_ann_ivf_topk", "q88_semantic_dedup",
+    "q89_bigram_surprisal", "q93_substring_dup", "q125_image_phash_dedup")
 
   override def afterAll(): Unit = {
     try spark.stop()
@@ -53,7 +55,7 @@ class ConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
     (rows.length.toLong, rows.map(_.toString).sorted.take(5).toSeq)
   }
 
-  test("10 queries produce identical results run concurrently vs serially") {
+  test("12 queries produce identical results run concurrently vs serially") {
     val serial = names.map(n => n -> fingerprint(n)).toMap
     spark.catalog.clearCache()
 
