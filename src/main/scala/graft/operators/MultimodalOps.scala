@@ -328,13 +328,26 @@ object MultimodalOps {
    * pipeline stage under test, so it must not ride inside the timed query
    * (same memoization rationale as [[VectorOps]]'s IVF index). The path is
    * an [[OpCache.perProcess]] entry under `tag`: built exactly once, and
-   * rebuilt into a fresh temp dir when the corpus dir's listing changes. */
+   * rebuilt into a fresh temp dir when the corpus dir's listing changes.
+   * The temp dir is deleted when the registry drops the entry, or at exit. */
   private def storedFixture(spark: SparkSession, tag: String, dir: String)(build: => Dataset[Asset]): String =
     OpCache.perProcess(spark, tag, dir) {
-      val path = java.nio.file.Files.createTempDirectory(tag).toString
-      build.write.mode("overwrite").parquet(path)
-      path
-    }
+      val fixture = StoredFixture(java.nio.file.Files.createTempDirectory(tag))
+      sys.addShutdownHook(fixture.close())
+      build.write.mode("overwrite").parquet(fixture.path.toString)
+      fixture
+    }.path.toString
+
+  private final case class StoredFixture(path: java.nio.file.Path) extends AutoCloseable {
+    /** Best-effort recursive delete; a failure only costs disk. */
+    def close(): Unit =
+      try {
+        val walk = java.nio.file.Files.walk(path)
+        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => java.nio.file.Files.deleteIfExists(p))
+        finally walk.close()
+      } catch { case scala.util.control.NonFatal(_) => }
+  }
 
   /** Read a stored fixture back SPREAD across the session's cores: the
    * fixture parquet is a couple of small files, so a plain read yields 1-2

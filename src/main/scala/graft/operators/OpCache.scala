@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
@@ -41,10 +41,9 @@ import org.apache.spark.storage.StorageLevel
  * time and re-checks it on every hit; any difference rebuilds the entry and
  * forgets the dir's [[perSession]] relations, whose file index is as stale.
  * A rewrite that keeps every top-level child's length and time (a part
- * file replaced in place inside a directory child) is not seen. A local
- * dir is listed through `java.nio` (one directory read and a stat per
- * child, no Hadoop file-system request); any other scheme through the
- * session's Hadoop file system, one list request per hit. `perSession`
+ * file replaced in place inside a directory child) is not seen. The dir is
+ * listed through the session's Hadoop file system: one list request per
+ * build and one per hit (on an object store, one LIST each). `perSession`
  * relations are not checked: Spark's own file index fails loudly on a
  * rewritten relation, and a per-lookup listing would tax every query.
  *
@@ -54,7 +53,9 @@ import org.apache.spark.storage.StorageLevel
  * `maxPinned` — a JVM cycling `newSession()` on one live context never
  * stops anything — and an evicted frame is unpersisted. [[releaseAll]] is
  * the explicit end of life: it releases every pinned entry and keeps
- * session relations and process values.
+ * session relations and process values. A dropped value that is
+ * `AutoCloseable` is closed. A build in flight is never dropped: its entry
+ * is registered when the build ends, so a later release covers it.
  */
 class OpCache private[graft] (
     maxPinned: Int = 64,
@@ -88,9 +89,8 @@ class OpCache private[graft] (
   private def lookup(key: Key, pinned: Boolean, stampNow: () => AnyRef)(build: => AnyRef): AnyRef = {
     var created: Entry = null
     val e = entries.computeIfAbsent(key, k => { created = new Entry(k, pinned, stampNow, () => build); created })
-    if (e eq created) admit(e)
     val v = try e.value catch { case t: Throwable => entries.remove(key, e); throw t }
-    if (e eq created) v
+    if (e eq created) { admit(e); v }
     else {
       val unchanged = e.unchanged(stampNow)
       if (unchanged && !(pinned && v.asInstanceOf[DataFrame].storageLevel == StorageLevel.NONE)) v
@@ -102,14 +102,14 @@ class OpCache private[graft] (
     }
   }
 
-  /** After an insert: sweep stopped sessions, keep one pinned frame per
-   * (session, slot), and hold the pinned bound. */
+  /** After a build: sweep stopped sessions, keep one pinned frame per
+   * (session, slot), and hold the bound on built pinned frames. */
   private def admit(e: Entry): Unit = {
     sweep()
     if (e.pinned) {
       entries.values.forEach(o =>
         if (o.pinned && (o.key.scope eq e.key.scope) && o.key.slot == e.key.slot && o.key.dir != e.key.dir) drop(o))
-      val pins = entries.values.asScala.filter(_.pinned).toSeq.sortBy(_.seq)
+      val pins = entries.values.asScala.filter(o => o.pinned && o.built != null).toSeq.sortBy(_.seq)
       pins.take(pins.size - maxPinned).foreach(drop)
     }
   }
@@ -119,10 +119,16 @@ class OpCache private[graft] (
     case _ =>
   })
 
-  /** Remove one entry; a pinned frame is unpersisted. A build still in
-   * flight keeps running and its caller gets its frame, unregistered. */
-  private def drop(e: Entry): Unit =
-    if (entries.remove(e.key, e) && e.pinned) Option(e.built).foreach(v => unpersistIfLive(v.asInstanceOf[DataFrame]))
+  /** Remove one built entry: a pinned frame is unpersisted, a closeable
+   * value closed. A build in flight is left registered (see LIFECYCLE). */
+  private def drop(e: Entry): Unit = {
+    val v = e.built
+    if (v != null && entries.remove(e.key, e)) v match {
+      case c: AutoCloseable => c.close()
+      case df: DataFrame if e.pinned => unpersistIfLive(df)
+      case _ =>
+    }
+  }
 
   private[operators] def persistBounded(slot: String, df: DataFrame): DataFrame = {
     val cached = persist(df)
@@ -221,24 +227,14 @@ object OpCache extends OpCache(64, _.sparkContext.isStopped) {
 
   private def stampOf(spark: SparkSession, dir: String): () => AnyRef = () => listing(spark, dir)
 
-  /** (name, length, modification time) of each child of `dir`, sorted;
-   * empty when the dir cannot be listed. */
-  private def listing(spark: SparkSession, dir: String): Seq[(String, Long, Long)] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val uri = path.toUri
+  /** (name, length, modification time) of each child of `dir`, sorted, from
+   * one list request; empty when the dir cannot be listed. */
+  private def listing(spark: SparkSession, dir: String): Seq[(String, Long, Long)] =
     try {
-      if (uri.getScheme == null || uri.getScheme == "file") {
-        val children = java.nio.file.Files.newDirectoryStream(java.nio.file.Paths.get(uri.getPath))
-        try children.asScala.map { p =>
-          val a = java.nio.file.Files.readAttributes(p, classOf[java.nio.file.attribute.BasicFileAttributes])
-          (p.getFileName.toString, a.size, a.lastModifiedTime.to(TimeUnit.NANOSECONDS))
-        }.toSeq.sorted
-        finally children.close()
-      } else
-        path.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(path)
-          .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).toSeq.sorted
+      val path = new org.apache.hadoop.fs.Path(dir)
+      path.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(path)
+        .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).toSeq.sorted
     } catch { case _: java.io.IOException => Nil }
-  }
 
   private def persist(df: DataFrame): DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
 

@@ -187,6 +187,37 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stored == (11L to 13L).toSet, "the fixture served the rows of the dir before its rewrite")
   }
 
+  test("a release during a build leaves the built frame registered for the next release") {
+    val reg = new OpCache()
+    val building = new CountDownLatch(1)
+    val go = new CountDownLatch(1)
+    val call = Future {
+      reg.pinned(spark, "slot", dir) { building.countDown(); go.await(); frame(spark, 12) }
+    }(ExecutionContext.global)
+    building.await()
+    reg.releaseAll() // the contract says not to; an unregistered frame would outlive every release
+    go.countDown()
+    val f = Await.result(call, 1.minute)
+    assert(reg.pinnedCount == 1, "the frame built across a release is not tracked")
+    assert(f.storageLevel != StorageLevel.NONE)
+    reg.releaseAll()
+    assert(reg.pinnedCount == 0)
+    assert(f.storageLevel == StorageLevel.NONE, "the frame built across a release stayed pinned")
+  }
+
+  test("a dropped closeable value is closed: on a rewrite of its dir and on release") {
+    val reg = new OpCache()
+    val tmp = java.nio.file.Files.createTempDirectory("closeable-entry")
+    final class Held extends AutoCloseable { @volatile var closed = false; def close(): Unit = closed = true }
+    val first = reg.perProcess(spark, "held", tmp.toString)(new Held)
+    assert(reg.perProcess(spark, "held", tmp.toString)(fail("a hit ran its build"): Held) eq first)
+    java.nio.file.Files.write(tmp.resolve("part"), Array[Byte](1))
+    val second = reg.perProcess(spark, "held", tmp.toString)(new Held)
+    assert(!(second eq first) && first.closed && !second.closed, "the stale value was kept or left open")
+    reg.release("held")
+    assert(second.closed, "a released value was left open")
+  }
+
   test("REAL stop releases entries under the default predicate (runs last: stops the context)") {
     // the injectable-predicate test above exercises the sweep logic; this
     // one exercises the PRODUCTION predicate against a genuinely stopped
