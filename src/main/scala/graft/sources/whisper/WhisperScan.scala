@@ -21,11 +21,13 @@ import graft.format.WhisperCodec
  * Scale design (the reference reads whole files eagerly on one node,
  * `whisper_pandas.py:263-269`; we do not):
  *  - planning reads ONLY headers (16 + 12*N bytes per file);
- *  - one scan unit per (file, archive); archives larger than
- *    `maxPointsPerSplit` are split into byte-range chunks so a huge archive
- *    (u32 points admits ~51 GB) does not serialize through one straggler
- *    task — with `timeSort=true` the chunks are rotation-ordered with
- *    checked time windows (see [[RingProbe]]); past `binThreshold` units,
+ *  - one scan unit per (file, archive); plain archives larger than the
+ *    scan's split size (its points over 4x the task slots, at least 1M and
+ *    at most `maxPointsPerSplit`; [[WhisperPlanning.splitPoints]]) are split
+ *    into byte-range chunks, so neither a file's one big archive nor a huge
+ *    one (u32 points admits ~51 GB) serializes through one straggler task —
+ *    with `timeSort=true` the chunks are rotation-ordered with checked time
+ *    windows (see [[RingProbe]]); past `binThreshold` units,
  *    SMALL units are bin-packed into shared partitions (see
  *    [[WhisperMultiPartition]]) so a million-file tree schedules
  *    O(bytes/split) tasks, not O(files);
@@ -403,7 +405,12 @@ private[whisper] object WhisperPlanning {
     }
   }
 
-  /** `probeOrdered=false` (the streaming tail) skips the per-archive
+  /** One scan unit per surviving (file, archive). Every header is read
+   * first, because the split size comes from the whole scan
+   * ([[splitPoints]]); a plain archive above it is cut into byte-range
+   * chunks, time-ordered ones under `timeSort` ([[RingProbe]]).
+   *
+   * `probeOrdered=false` (the streaming tail) skips the per-archive
    * rotation probe: micro-batches prune by pushed time-window predicates and
    * never consume cross-chunk ordering, so oversized `timeSort` archives
    * stay one partition there exactly as before r10.
@@ -434,43 +441,74 @@ private[whisper] object WhisperPlanning {
       }
     }
     val perFile = WhisperIO.parMap(liveEntries, options.planningParallelism) { entry =>
-      val path = entry.path
-      val gz = options.gzipFor(path)
-      val meta = metaFor(entry, gz)
-      meta.archives.filter(a => partitionSurvives(preds, path, a.index)).flatMap { a =>
-        // an archive too big for one in-memory buffer MUST split even with
-        // timeSort on (ordering then holds per chunk, not per archive);
-        // gzip is non-splittable: one stream per file/archive regardless.
-        val mustSplit = !gz && a.points * WhisperCodec.PointSize > Int.MaxValue.toLong
-        val wantSplit = !gz && a.points > options.maxPointsPerSplit
-        val step = math.min(options.maxPointsPerSplit, (Int.MaxValue.toLong / WhisperCodec.PointSize) - 1)
-        def whole =
-          Seq(WhisperInputPartition(path, gz, a.index, a.offset, a.secondsPerPoint, a.points, 0L, a.points))
+      val gz = options.gzipFor(entry.path)
+      (entry, gz, metaFor(entry, gz).archives.filter(a => partitionSurvives(preds, entry.path, a.index)))
+    }
+    // gzip is non-splittable: one stream per file/archive, whatever its size
+    val step = splitPoints(perFile.collect { case (_, false, as) => as.map(_.points).sum }.sum, options)
+    // timeSort: chunk the ring's two sorted runs oldest-first so the archive
+    // parallelizes WITHOUT losing its per-archive order. The probes read a
+    // few slots each, concurrently like the header reads.
+    val probed = perFile.flatMap { case (e, gz, as) =>
+      if (gz || !options.timeSort || !options.orderedSplit || !probeOrdered) Nil
+      else as.filter(_.points > step).map(e -> _)
+    }
+    val probes = WhisperIO.parMap(probed, options.planningParallelism) { case (e, a) =>
+      (e.path, a.index) -> RingProbe.probe(e.path, e.len, a.offset, a.secondsPerPoint, a.points)
+    }.toMap
+    perFile.flatMap { case (e, gz, as) =>
+      val path = e.path
+      as.flatMap { a =>
         def physicalChunks =
           (0L until a.points by step).map { start =>
             val cnt = math.min(step, a.points - start)
             WhisperInputPartition(path, gz, a.index, a.offset, a.secondsPerPoint, a.points, start, cnt)
           }
-        if (gz || (!wantSplit && !mustSplit)) whole
+        // an archive too big for one in-memory buffer MUST split even with
+        // timeSort on (ordering then holds per chunk, not per archive); the
+        // step is below that size, so such an archive is always over it
+        val mustSplit = a.points * WhisperCodec.PointSize > Int.MaxValue.toLong
+        def whole =
+          Seq(WhisperInputPartition(path, gz, a.index, a.offset, a.secondsPerPoint, a.points, 0L, a.points))
+        if (gz || a.points <= step) whole
         else if (!options.timeSort) physicalChunks
-        else if (options.orderedSplit && probeOrdered) {
-          // timeSort: chunk the ring's two sorted runs oldest-first so the
-          // archive parallelizes WITHOUT losing its per-archive order — a
-          // max-retention archive (u32 points admits ~51 GB) must not become
-          // one straggler task on an otherwise idle cluster. Probe failure
-          // (all-zero, truncated-beyond-probing, non-dense ring detected on
-          // the probe path) keeps the pre-r10 single-partition shape unless
-          // the 2 GiB buffer limit forces a split.
-          RingProbe.probe(path, a.offset, a.secondsPerPoint, a.points) match {
+        else
+          probes.get((path, a.index)).flatten match {
             case Some(rp) => RingProbe.orderedChunks(path, a.index, a.offset, a.secondsPerPoint, a.points, rp, step)
-            case None     => if (mustSplit) physicalChunks else whole
+            // no probe (streaming tail, orderedSplit=false) or a declined one
+            // (all-zero ring, budget spent, off-grid point): the pre-r10
+            // single-partition shape unless the buffer limit forces a split
+            case None => if (mustSplit) physicalChunks else whole
           }
-        } else if (mustSplit) physicalChunks
-        else whole
       }
-    }
-    perFile.flatten.toArray
+    }.toArray
   }
+
+  /** Splits per task slot: one chunk per slot balances points but not kept
+   * rows (a partly filled ring's filled run can land in one chunk), so
+   * chunks are a quarter of a slot's share. */
+  private val SplitsPerSlot = 4
+  /** Below this many points a split is not worth its task and ring probe. */
+  private val MinSplitPoints = 1000000L
+
+  /** Points per split of a scan whose splittable (plain) archives hold
+   * `points` in total: the scan's share for a quarter of a task slot, like
+   * Spark's `FilePartition.maxSplitBytes` sizes file splits from bytes per
+   * core, clamped to [[MinSplitPoints]] below and to `maxPointsPerSplit` and
+   * the 2 GiB read buffer above. A many-file tree reaches the cap, so its
+   * archives stay whole and bin-pack as before. */
+  def splitPoints(points: Long, options: WhisperOptions): Long = {
+    val cap = math.min(options.maxPointsPerSplit, Int.MaxValue.toLong / WhisperCodec.PointSize - 1)
+    math.min(cap, math.max(MinSplitPoints, points / (SplitsPerSlot.toLong * parallelism())))
+  }
+
+  /** Task slots of the session planning the scan (its `defaultParallelism`);
+   * 8 only when no session exists, e.g. a plan built outside any query. */
+  def parallelism(): Int =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sparkContext.defaultParallelism)
+      .getOrElse(8)
 
   /** Bin-pack small units into shared partitions once the unit count
    * exceeds `binThreshold` (the many-small-files regime): first-fit over a
@@ -489,13 +527,10 @@ private[whisper] object WhisperPlanning {
       // is fed (totalCost/parallelism) — 200 small files must not collapse
       // into one task on a 32-core box while a million files still bound
       // the partition count at O(totalBytes / maxSplit).
-      val parallelism =
-        try org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
-        catch { case _: Throwable => 8 }
       val totalCost = units.map(u => math.max(u.posCount, openCost)).sum
       val capacity = math.max(
         2L * openCost,
-        math.min(options.maxPointsPerSplit, totalCost / math.max(1, parallelism) + 1))
+        math.min(options.maxPointsPerSplit, totalCost / math.max(1, parallelism()) + 1))
       val sorted = units.sortBy(u => (u.filePath, u.archiveIndex, u.posStart))
       val bins = scala.collection.mutable.ArrayBuffer.empty[Array[WhisperInputPartition]]
       val cur = scala.collection.mutable.ArrayBuffer.empty[WhisperInputPartition]
@@ -520,131 +555,145 @@ private[whisper] object WhisperPlanning {
  *
  * A healthy whisper ring written at every interval is a rotated sorted
  * array: physical slots `[w, N)` hold the oldest ascending run, `[0, w)` the
- * newest (`whisper_pandas.py:231-232` recovers order with a full sort; the
- * single-partition reader with a ring rotation; this probe lets MULTIPLE
+ * newest, and a partly filled ring has one never-written gap of zeros
+ * between them (`whisper_pandas.py:231-232` recovers order with a full sort;
+ * the single-partition reader with a ring rotation; this probe lets MULTIPLE
  * partitions share one archive and still tile disjoint ascending time
  * windows). The format fixes each slot's timestamp up to an era:
  * `ts(i) = anchor + (i - anchorIdx)*spp  (mod spp*N)`, so ONE nonzero anchor
  * plus a binary search for the era drop `w` yields, arithmetically, a
  * planned window `[predTs(s), predTs(e))` per chunk — no boundary reads.
  *
- * Cost: O(log N) ranged block reads of 48 KB each (budgeted at
- * [[MaxReads]]); EOF reads as zeros so truncated files probe like
- * partially-filled rings. The probe DECLINES (returns None) on: all-zero
- * archives, read-budget exhaustion (giant zero regions), or any probed
- * nonzero point off the anchor's interval grid / outside eras {0, -1} — a
- * sparsely-written ring carrying stale multi-era residue is not a rotated
- * sorted array, and chunking it ordered would be wrong. Because the probe
- * only samples, the claim is additionally CHECKED at read time when the
- * sort elision consumes it ([[WhisperScan.withWindowEnforcement]]).
+ * The two end slots of the READABLE extent (the file length bounds it, so a
+ * truncated ring reads as ending early, not as wrapping) classify the ring:
+ * a newer first slot than last means it wraps, and the cut is bisected on
+ * single-slot reads; otherwise it has one era and the cut is 0. A bisection
+ * step that lands on a zero reads one block after it: an all-zero block is
+ * the never-written gap, inside which every cut is equivalent, so the probe
+ * never scans the gap itself.
+ *
+ * Cost: O(log N) reads of one slot, plus at most a couple of 48 KB blocks,
+ * within [[MaxReads]]. The probe DECLINES (returns None) on: all-zero or
+ * unreadable archives, read-budget exhaustion, or any probed nonzero point
+ * off the anchor's interval grid / outside eras {0, -1} — a sparsely-written
+ * ring carrying stale multi-era residue is not a rotated sorted array, and
+ * chunking it ordered would be wrong. Because the probe only samples (a
+ * zero run inside a written run can pass for the gap), the claim is
+ * additionally CHECKED at read time when the sort elision consumes it
+ * ([[WhisperScan.withWindowEnforcement]]), and every chunk still sorts its
+ * own rows.
  */
 private[whisper] object RingProbe {
 
   final case class Probe(w: Long, anchorIdx: Long, anchorTs: Long)
 
   private val BlockPts = 4096
-  private val MaxReads = 64
+  val MaxReads = 64
   private object GiveUp extends Exception with scala.util.control.NoStackTrace
 
-  def probe(path: String, archiveOffset: Long, spp: Long, points: Long): Option[Probe] = {
-    if (spp <= 0 || points <= 1 || spp > Long.MaxValue / points) return None
+  /** Probes the archive at `archiveOffset` of a plain file `fileLen` bytes
+   * long (negative = unknown: every slot counts as readable). */
+  def probe(path: String, fileLen: Long, archiveOffset: Long, spp: Long, points: Long): Option[Probe] = {
+    val readable =
+      if (fileLen < 0) points
+      else math.max(0L, math.min(points, (fileLen - archiveOffset) / WhisperCodec.PointSize))
     val p = new HPath(path)
     try {
       val fs = p.getFileSystem(WhisperIO.hadoopConf())
       val in = fs.open(p)
-      try probeImpl(in, archiveOffset, spp, points)
+      try locate(readable, spp, points)(slotReader(in, archiveOffset))
       finally in.close()
     } catch { case _: java.io.IOException => None }
   }
 
-  private def probeImpl(
-      in: org.apache.hadoop.fs.FSDataInputStream,
-      off: Long,
-      spp: Long,
-      n: Long): Option[Probe] = {
-    val sppN = spp * n
-    var reads = 0
+  /** Timestamps of slots `[start, start+cnt)` of the archive at `off`;
+   * EOF reads as zeros. */
+  private def slotReader(in: org.apache.hadoop.fs.FSDataInputStream, off: Long)(start: Long, cnt: Int): Array[Long] = {
+    val buf = new Array[Byte](cnt * WhisperCodec.PointSize)
+    var got = 0
+    try {
+      in.seek(off + start * WhisperCodec.PointSize)
+      got = WhisperCodec.readFully(in, buf, buf.length)
+    } catch { case _: java.io.EOFException => }
+    val out = new Array[Long](cnt)
+    var i = 0
+    while (i < got / WhisperCodec.PointSize) { out(i) = WhisperCodec.timestampAt(buf, i * WhisperCodec.PointSize); i += 1 }
+    out
+  }
 
-    // timestamps of slots [start, start+cnt); EOF-as-zeros
-    def readTs(start: Long, cnt: Int): Array[Long] = {
+  /** The cut of a ring of `points` slots whose first `readable` can be
+   * read, through `read(start, cnt)` (the timestamps of those slots). Each
+   * call of `read` counts against [[MaxReads]]. */
+  def locate(readable: Long, spp: Long, points: Long)(read: (Long, Int) => Array[Long]): Option[Probe] = {
+    if (spp <= 0 || points <= 1 || spp > Long.MaxValue / points || readable < 1) return None
+    val sppN = spp * points
+    var reads = 0
+    def slots(start: Long, cnt: Int): Array[Long] = {
       if (reads >= MaxReads) throw GiveUp
       reads += 1
-      val buf = new Array[Byte](cnt * WhisperCodec.PointSize)
-      var got = 0
-      try {
-        in.seek(off + start * WhisperCodec.PointSize)
-        got = WhisperCodec.readFully(in, buf, buf.length)
-      } catch { case _: java.io.EOFException => }
-      val bb = java.nio.ByteBuffer.wrap(buf)
-      val out = new Array[Long](cnt)
-      var i = 0
-      val full = got / WhisperCodec.PointSize
-      while (i < full) { out(i) = bb.getInt(i * WhisperCodec.PointSize).toLong & 0xffffffffL; i += 1 }
-      out
+      read(start, cnt)
     }
-
-    // first nonzero (idx, ts) in [from, until)
-    def forward(from: Long, until: Long): Option[(Long, Long)] = {
-      var s = from
-      while (s < until) {
-        val cnt = math.min(BlockPts.toLong, until - s).toInt
-        val ts = readTs(s, cnt)
-        var i = 0
-        while (i < cnt) { if (ts(i) != 0L) return Some((s + i, ts(i))); i += 1 }
-        s += cnt
-      }
-      None
-    }
-
-    // last nonzero (idx, ts) in [downTo, from)
-    def backward(from: Long, downTo: Long): Option[(Long, Long)] = {
-      var e = from
-      while (e > downTo) {
-        val s = math.max(downTo, e - BlockPts)
-        val cnt = (e - s).toInt
-        val ts = readTs(s, cnt)
-        var i = cnt - 1
-        while (i >= 0) { if (ts(i) != 0L) return Some((s + i, ts(i))); i -= 1 }
-        e = s
-      }
-      None
-    }
+    def at(i: Long): Long = slots(i, 1)(0)
 
     try {
-      val (faIdx, faTs) = forward(0L, n).getOrElse(return None)
-      def predTs(i: Long): Long = faTs + (i - faIdx) * spp
-      // every probed nonzero must sit EXACTLY in era 0 (>= anchor) or era -1
-      // (< anchor) of the anchor's grid; anything else is a non-dense ring
-      def eraOk(i: Long, ts: Long): Boolean =
-        ts == predTs(i) || ts == predTs(i) - sppN
-      backward(n, faIdx + 1) match {
-        case None => Some(Probe(0L, faIdx, faTs)) // a lone anchor run head
-        case Some((lzIdx, lzTs)) =>
-          if (lzTs >= faTs) {
-            // unrotated (possibly leading zeros); tail must be era 0
-            if (lzTs == predTs(lzIdx)) Some(Probe(0L, faIdx, faTs)) else None
-          } else {
-            if (lzTs != predTs(lzIdx) - sppN) return None
-            // smallest i in (faIdx, lzIdx] whose first forward nonzero is
-            // pre-anchor (era -1): the rotation point (or the head of the
-            // zero gap in front of it — an equivalent cut, the gap rows
-            // do not exist)
-            var lo = faIdx
-            var hi = lzIdx
-            while (hi - lo > 1) {
-              val mid = (lo + hi) >>> 1
-              forward(mid, lzIdx + 1) match {
-                case Some((i2, t2)) =>
-                  if (!eraOk(i2, t2)) return None
-                  if (t2 < faTs) hi = mid
-                  else lo = i2 // zeros in [mid, i2) then an era-0 value
-                case None => return None // cannot happen: lz is in range
-              }
+      val last = readable - 1
+      val first = at(0L)
+      val lastTs = if (last == 0) first else at(last)
+      if (first == 0L || lastTs == 0L) {
+        // an unwritten end: a dense ring has not wrapped (or its older run
+        // lies past EOF), so it is one era and needs only an anchor
+        val anchor =
+          if (first != 0L) Some((0L, first))
+          else if (lastTs != 0L) Some((last, lastTs))
+          else written(last, at)
+        anchor.map { case (i, t) => Probe(0L, i, t) }
+      } else {
+        def predTs(i: Long): Long = first + i * spp
+        // every probed nonzero must sit EXACTLY in era 0 (the first slot's)
+        // or era -1 of the first slot's grid; anything else is a non-dense
+        // ring. True for era -1.
+        def older(i: Long, ts: Long): Boolean =
+          if (ts == predTs(i)) false else if (ts == predTs(i) - sppN) true else throw GiveUp
+        if (!older(last, lastTs)) Some(Probe(0L, 0L, first)) // one run, not wrapped
+        else {
+          // lo holds era 0; every nonzero from hi on is era -1 (hi is a cut)
+          var lo = 0L
+          var hi = last
+          while (hi - lo > 1) {
+            val mid = (lo + hi) >>> 1
+            val t = at(mid)
+            if (t != 0L) { if (older(mid, t)) hi = mid else lo = mid }
+            else {
+              val block = slots(mid, math.min(BlockPts.toLong, hi - mid).toInt)
+              val k = block.indexWhere(_ != 0L)
+              // all zero up to hi, or for a whole block: the gap
+              if (k < 0) return Some(Probe(mid, 0L, first))
+              if (older(mid + k, block(k))) hi = mid // zeros, then era -1: mid is in the gap
+              else lo = mid + k // a zero run inside era 0
             }
-            Some(Probe(hi, faIdx, faTs))
           }
+          Some(Probe(hi, 0L, first))
+        }
       }
     } catch { case GiveUp => None }
+  }
+
+  /** Some written (nonzero) slot strictly inside `(0, last)`, sampled on a
+   * grid that halves its spacing each round — it finds any written run of
+   * at least 1/32 of the ring within 31 reads, without scanning zeros. */
+  private def written(last: Long, at: Long => Long): Option[(Long, Long)] = {
+    var den = 2L
+    while (den <= last) {
+      var j = 1L
+      while (j < den) {
+        val i = j * last / den
+        val t = at(i)
+        if (t != 0L) return Some((i, t))
+        j += 2
+      }
+      den *= 2
+    }
+    None
   }
 
   /** One archive's chunks in GLOBAL ascending-time order — the older run
@@ -932,14 +981,16 @@ private[whisper] object WhisperDecode {
       part: WhisperInputPartition,
       pass: Pass): Decoded = {
     val gin = new GZIPInputStream(raw, 1 << 16)
+    val chunkPts = math.min(part.posCount, 1L << 20).toInt // <= 12 MiB buffer
+    // at least 64 KiB, the scratch the bytes ahead of the archive inflate
+    // into: `skip` would inflate them through a fresh 512-byte array
+    val chunk = new Array[Byte](math.max(chunkPts * PointSize, 1 << 16))
     var toSkip = part.archiveOffset + part.posStart * PointSize
     while (toSkip > 0) {
-      val s = gin.skip(toSkip)
-      if (s <= 0) toSkip = 0 else toSkip -= s
+      val n = gin.read(chunk, 0, math.min(toSkip, chunk.length.toLong).toInt)
+      if (n < 0) toSkip = 0 else toSkip -= n
     }
-    val chunkPts = math.min(part.posCount, 1L << 20).toInt // <= 12 MiB buffer
-    val chunk = new Array[Byte](chunkPts * PointSize)
-    var recs = new Array[Byte](chunk.length)
+    var recs = new Array[Byte](chunkPts * PointSize)
     var copied = 0
     // appends chunk records [from, until), all kept, after the kept records
     def copy(from: Int, until: Int): Unit = if (until > from) {

@@ -318,6 +318,57 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("fuzz: ordered chunking across long never-written gaps — wrapped, unwrapped, truncated in the gap") {
+    // Rings of 300K+ points filled 5-75%: the zero run is up to 285K slots,
+    // longer than a probe may read. Each must still split into ordered
+    // chunks with the unchunked content, concatenating in time order.
+    val rnd = new Random(303030L)
+    (1 to 6).foreach { i =>
+      val points = 300000L + rnd.nextInt(300000)
+      val filled = (points * (0.05 + 0.70 * rnd.nextDouble())).toLong
+      val spp = 1L + rnd.nextInt(30)
+      val kind = i % 3 // 0: wrapped, 1: unwrapped, 2: either, truncated in the gap
+      val wrapped = kind == 0 || (kind == 2 && rnd.nextBoolean())
+      val rotation =
+        if (wrapped) points - filled + 1 + rnd.nextLong(filled - 1)
+        else 1 + rnd.nextLong(points - filled - 2)
+      val lastTs = 1500000000L + rnd.nextInt(400000000)
+      val spec = FileSpec(archives = Seq(ArchiveSpec(spp, points, filled, lastTs - lastTs % spp, rotation)))
+      val path = dir.resolve(s"gap$i.wsp")
+      val truncAt =
+        if (kind != 2) None
+        else {
+          val gapStart = (rotation + filled) % points
+          val gapEnd = if (wrapped) rotation else points
+          Some(gapStart + 1 + rnd.nextLong(gapEnd - gapStart - 1))
+        }
+      truncAt match {
+        case Some(slots) =>
+          val tmp = dir.resolve(s"gap${i}_full.wsp")
+          WhisperWriter.writeFile(tmp, spec)
+          val headerSize = WhisperCodec.FileMetaSize + WhisperCodec.ArchiveMetaSize
+          WhisperWriter.truncateCopy(tmp, path, (headerSize + slots * WhisperCodec.PointSize).toInt)
+          Files.delete(tmp)
+        case None => WhisperWriter.writeFile(path, spec)
+      }
+      val mpps = 20000L + rnd.nextInt(40000)
+      def read(maxSplit: Long) = spark.read.format("whisper")
+        .option("toDatetime", "false")
+        .option("maxPointsPerSplit", maxSplit.toString)
+        .load(path.toString)
+      val ctx = s"ring #$i (points=$points filled=$filled rot=$rotation trunc=$truncAt mpps=$mpps)"
+      val chunked = read(mpps)
+      val whole = read(1L << 23)
+      assert(chunked.rdd.getNumPartitions > 1, s"$ctx did not split")
+      assert(whole.rdd.getNumPartitions == 1, s"$ctx unchunked control split")
+      val a = chunked.collect().map(r => (r.getLong(2), r.getInt(3), r.getDouble(4)))
+      val b = whole.collect().map(r => (r.getLong(2), r.getInt(3), r.getDouble(4)))
+      assert(a.nonEmpty && (a.sortBy(_._1) sameElements b.sortBy(_._1)), s"$ctx chunked content diverges")
+      val ts = a.map(_._2)
+      assert(ts.indices.forall(j => j == 0 || ts(j - 1) <= ts(j)), s"$ctx chunk concatenation not time-sorted")
+    }
+  }
+
   test("ordered chunking: pathological out-of-era ring fails loudly under elision, reads fine otherwise (r10)") {
     // A ring with stale multi-era residue is NOT a rotated sorted array; the
     // plan-time probe only samples, so the sort elision must convert its
@@ -370,6 +421,31 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(hatch.rdd.getNumPartitions == 1)
       val hts = hatch.select("timestamp").collect().map(_.getTimestamp(0).getTime)
       assert(hts.length == points && (hts sameElements hts.sorted))
+
+      // A wrapped ring with an all-zero hole inside its newer run [0, 3N/4):
+      // the probe's first bisection step lands in the hole, which it can take
+      // for the never-written gap. Elided, the sort must come out right or
+      // fail loudly; without a sort the content is complete.
+      val holeN = 400000L
+      val (holeFrom, holeLen) = (195000L, 10000L)
+      val holePath = dir.resolve("hole.wsp")
+      WhisperWriter.writeFile(holePath, FileSpec(archives = Seq(
+        ArchiveSpec(spp, holeN, filled = holeN, lastTimestamp = 1600000000L, rotation = 3 * holeN / 4))))
+      val hraf = new java.io.RandomAccessFile(holePath.toFile, "rw")
+      try {
+        hraf.seek(headerSize + holeFrom * WhisperCodec.PointSize)
+        hraf.write(new Array[Byte]((holeLen * WhisperCodec.PointSize).toInt))
+      } finally hraf.close()
+      val holed = s2.read.format("whisper").option("maxPointsPerSplit", "50000").load(holePath.toString)
+      assert(holed.rdd.getNumPartitions > 1)
+      assert(holed.count() == holeN - holeLen)
+      try {
+        val got = holed.orderBy("timestamp").select("timestamp").collect().map(_.getTimestamp(0).getTime)
+        assert(got.length == holeN - holeLen && (got sameElements got.sorted), "elided sort out of order")
+      } catch {
+        case e: org.apache.spark.SparkException =>
+          assert(rootMsg(e).contains("dense-rotation invariant"), s"unexpected: ${rootMsg(e)}")
+      }
     } finally {
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)

@@ -412,6 +412,37 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("split sizing: one large archive at default options feeds every task slot, and its orderBy still elides") {
+    val prevDefault = SparkSession.getDefaultSession
+    val prevActive = SparkSession.getActiveSession
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    try {
+      val s2 = SparkSession.builder()
+        .master("local[4,2]")
+        .appName("split-sizing-spec")
+        .withExtensions(new graft.GraftExtensions)
+        .getOrCreate()
+      // 3M slots, 1.8M written and wrapped: the newer run [0, 600K), the
+      // never-written gap, the older run [1.8M, 3M). Far under the 8M-point
+      // maxPointsPerSplit, so only the scan-sized split cuts it.
+      val big = dir.resolve("split3m.wsp")
+      WhisperWriter.writeFile(big, FileSpec(archives = Seq(
+        ArchiveSpec(60, 3000000, filled = 1800000, lastTimestamp = 1599999960L, rotation = 1800000))))
+      def planOf(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
+      val df = s2.read.format("whisper").load(big.toString)
+      assert(df.rdd.getNumPartitions >= 4, s"planned ${df.rdd.getNumPartitions} partitions for 4 task slots")
+      val ordered = df.select("timestamp", "value").orderBy("timestamp")
+      assert(!planOf(ordered).contains("Sort ["), "chunked single-archive sort must be elided")
+      assert(!planOf(ordered).contains("Exchange"), "chunked range exchange must be elided")
+      val ts = ordered.select("timestamp").collect().map(_.getTimestamp(0).getTime)
+      assert(ts.length == 1800000 && ts.sameElements(ts.sorted), "elided result must be sorted and complete")
+    } finally {
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
   test("streaming tail bin-packs many small files per trigger (r8)") {
     import org.apache.spark.sql.streaming.Trigger
     // reuse the 200-file tree from the batch binning test (written there if
