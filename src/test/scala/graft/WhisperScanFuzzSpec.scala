@@ -272,7 +272,28 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the unchunked scan, (3) the per-archive partition concatenation stays
     // globally time-sorted — the rotation probe must emit the oldest run
     // first, with truncation (EOF-as-zeros) and empty rings degrading
-    // gracefully.
+    // gracefully. Then 6 rings of 300K+ points filled 5-75% — wrapped,
+    // unwrapped, and truncated inside the gap — whose zero run (up to 285K
+    // slots) is longer than the probe may read: the same properties hold.
+    def checkSplit(ctx: String, path: Path, mpps: Long): Unit = {
+      def read(maxSplit: Long) = spark.read.format("whisper")
+        .option("dropTimeZero", "true").option("toDatetime", "false")
+        .option("maxPointsPerSplit", maxSplit.toString)
+        .load(path.toString)
+      val chunked = read(mpps)
+      val whole = read(1L << 23)
+      assert(chunked.rdd.getNumPartitions > 1, s"$ctx did not split")
+      assert(whole.rdd.getNumPartitions == 1, s"$ctx unchunked control split")
+      val a = chunked.collect().map(r => (r.getLong(2), r.getInt(3), r.getDouble(4)))
+      val b = whole.collect().map(r => (r.getLong(2), r.getInt(3), r.getDouble(4)))
+      assert(a.sortBy(_._1) sameElements b.sortBy(_._1), s"$ctx chunked content diverges")
+      // partition-concatenation order (collect preserves partition index
+      // order, and each chunk its emission order)
+      val ts = a.map(_._2)
+      assert(ts.indices.forall(j => j == 0 || ts(j - 1) <= ts(j)),
+        s"$ctx chunk concatenation not time-sorted")
+    }
+
     val rnd = new Random(101010L)
     (1 to 12).foreach { i =>
       val points = 2000L + rnd.nextInt(6000)
@@ -298,41 +319,20 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       } else WhisperWriter.writeFile(path, spec)
 
       val mpps = 256L + rnd.nextInt(1024)
-      def read(maxSplit: Long) = spark.read.format("whisper")
-        .option("dropTimeZero", "true").option("toDatetime", "false")
-        .option("maxPointsPerSplit", maxSplit.toString)
-        .load(path.toString)
-      val chunked = read(mpps)
-      val whole = read(1L << 23)
-      val ctx = s"ring #$i (points=$points spp=$spp filled=$filled rot=$rotation mpps=$mpps)"
-      assert(chunked.rdd.getNumPartitions > 1, s"$ctx did not split")
-      assert(whole.rdd.getNumPartitions == 1, s"$ctx unchunked control split")
-      val a = chunked.collect().map(r => (r.getLong(2), r.getInt(3), r.getDouble(4)))
-      val b = whole.collect().map(r => (r.getLong(2), r.getInt(3), r.getDouble(4)))
-      assert(a.sortBy(_._1) sameElements b.sortBy(_._1), s"$ctx chunked content diverges")
-      // partition-concatenation order (collect preserves partition index
-      // order, and each chunk its emission order)
-      val ts = a.map(_._2)
-      assert(ts.indices.forall(j => j == 0 || ts(j - 1) <= ts(j)),
-        s"$ctx chunk concatenation not time-sorted")
+      checkSplit(s"ring #$i (points=$points spp=$spp filled=$filled rot=$rotation mpps=$mpps)", path, mpps)
     }
-  }
 
-  test("fuzz: ordered chunking across long never-written gaps — wrapped, unwrapped, truncated in the gap") {
-    // Rings of 300K+ points filled 5-75%: the zero run is up to 285K slots,
-    // longer than a probe may read. Each must still split into ordered
-    // chunks with the unchunked content, concatenating in time order.
-    val rnd = new Random(303030L)
+    val gapRnd = new Random(303030L)
     (1 to 6).foreach { i =>
-      val points = 300000L + rnd.nextInt(300000)
-      val filled = (points * (0.05 + 0.70 * rnd.nextDouble())).toLong
-      val spp = 1L + rnd.nextInt(30)
+      val points = 300000L + gapRnd.nextInt(300000)
+      val filled = (points * (0.05 + 0.70 * gapRnd.nextDouble())).toLong
+      val spp = 1L + gapRnd.nextInt(30)
       val kind = i % 3 // 0: wrapped, 1: unwrapped, 2: either, truncated in the gap
-      val wrapped = kind == 0 || (kind == 2 && rnd.nextBoolean())
+      val wrapped = kind == 0 || (kind == 2 && gapRnd.nextBoolean())
       val rotation =
-        if (wrapped) points - filled + 1 + rnd.nextLong(filled - 1)
-        else 1 + rnd.nextLong(points - filled - 2)
-      val lastTs = 1500000000L + rnd.nextInt(400000000)
+        if (wrapped) points - filled + 1 + gapRnd.nextLong(filled - 1)
+        else 1 + gapRnd.nextLong(points - filled - 2)
+      val lastTs = 1500000000L + gapRnd.nextInt(400000000)
       val spec = FileSpec(archives = Seq(ArchiveSpec(spp, points, filled, lastTs - lastTs % spp, rotation)))
       val path = dir.resolve(s"gap$i.wsp")
       val truncAt =
@@ -340,7 +340,7 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         else {
           val gapStart = (rotation + filled) % points
           val gapEnd = if (wrapped) rotation else points
-          Some(gapStart + 1 + rnd.nextLong(gapEnd - gapStart - 1))
+          Some(gapStart + 1 + gapRnd.nextLong(gapEnd - gapStart - 1))
         }
       truncAt match {
         case Some(slots) =>
@@ -351,21 +351,8 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
           Files.delete(tmp)
         case None => WhisperWriter.writeFile(path, spec)
       }
-      val mpps = 20000L + rnd.nextInt(40000)
-      def read(maxSplit: Long) = spark.read.format("whisper")
-        .option("toDatetime", "false")
-        .option("maxPointsPerSplit", maxSplit.toString)
-        .load(path.toString)
-      val ctx = s"ring #$i (points=$points filled=$filled rot=$rotation trunc=$truncAt mpps=$mpps)"
-      val chunked = read(mpps)
-      val whole = read(1L << 23)
-      assert(chunked.rdd.getNumPartitions > 1, s"$ctx did not split")
-      assert(whole.rdd.getNumPartitions == 1, s"$ctx unchunked control split")
-      val a = chunked.collect().map(r => (r.getLong(2), r.getInt(3), r.getDouble(4)))
-      val b = whole.collect().map(r => (r.getLong(2), r.getInt(3), r.getDouble(4)))
-      assert(a.nonEmpty && (a.sortBy(_._1) sameElements b.sortBy(_._1)), s"$ctx chunked content diverges")
-      val ts = a.map(_._2)
-      assert(ts.indices.forall(j => j == 0 || ts(j - 1) <= ts(j)), s"$ctx chunk concatenation not time-sorted")
+      val mpps = 20000L + gapRnd.nextInt(40000)
+      checkSplit(s"gap ring #$i (points=$points filled=$filled rot=$rotation trunc=$truncAt mpps=$mpps)", path, mpps)
     }
   }
 
