@@ -16,18 +16,18 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  *                   (the ring buffer is physically rotated).
  *  - `dtype`        (default "double"): value column type, "double" | "float".
  *  - `compression`  (default "infer"): "infer" (by .gz suffix) | "none" | "gzip".
- *  - `maxPointsPerSplit` (default 8M): the cap on a scan's split size. The
- *                   split size is the scan's plain-archive points over 4x the
- *                   session's task slots, at least 1M and at most this; plain
- *                   archives above it are split into multiple scan partitions
- *                   (byte-range reads; gzip never splits). With
- *                   `timeSort=true` the chunks are emitted oldest-run-first via a
- *                   plan-time ring-rotation probe so each chunk is ascending AND
- *                   chunk boundaries tile disjoint time windows (see
- *                   `orderedSplit`); the probe bisects on single slots and steps
- *                   over a never-written gap instead of reading it. A probe
- *                   failure falls back to one partition per archive (the pre-r10
- *                   shape) so per-archive order is never silently lost.
+ *  - `maxPointsPerSplit` (default 8M): plain archives larger than
+ *                   `min(maxPointsPerSplit, 1M)` points are split into
+ *                   multiple scan partitions (byte-range reads; gzip never
+ *                   splits), so a file's one big archive feeds every task
+ *                   slot. With `timeSort=true` the chunks are emitted
+ *                   oldest-run-first via a plan-time ring-rotation probe so
+ *                   each chunk is ascending AND chunk boundaries tile
+ *                   disjoint time windows (see `orderedSplit`); the probe
+ *                   samples a long never-written gap instead of scanning it.
+ *                   A probe failure falls back to one partition per archive
+ *                   (the pre-r10 shape) so per-archive order is never
+ *                   silently lost.
  *  - `orderedSplit` (default true): allow the rotation-probed ordered chunking of
  *                   oversized `timeSort` archives. `false` restores one partition
  *                   per archive (the escape hatch named by the runtime

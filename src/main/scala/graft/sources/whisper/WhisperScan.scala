@@ -21,13 +21,12 @@ import graft.format.WhisperCodec
  * Scale design (the reference reads whole files eagerly on one node,
  * `whisper_pandas.py:263-269`; we do not):
  *  - planning reads ONLY headers (16 + 12*N bytes per file);
- *  - one scan unit per (file, archive); plain archives larger than the
- *    scan's split size (its points over 4x the task slots, at least 1M and
- *    at most `maxPointsPerSplit`; [[WhisperPlanning.splitPoints]]) are split
- *    into byte-range chunks, so neither a file's one big archive nor a huge
- *    one (u32 points admits ~51 GB) serializes through one straggler task —
- *    with `timeSort=true` the chunks are rotation-ordered with checked time
- *    windows (see [[RingProbe]]); past `binThreshold` units,
+ *  - one scan unit per (file, archive); plain archives larger than
+ *    `min(maxPointsPerSplit, 1M)` points are split into byte-range chunks,
+ *    so neither a file's one big archive nor a huge one (u32 points admits
+ *    ~51 GB) serializes through one straggler task — with `timeSort=true`
+ *    the chunks are rotation-ordered with checked time windows (see
+ *    [[RingProbe]]); past `binThreshold` units,
  *    SMALL units are bin-packed into shared partitions (see
  *    [[WhisperMultiPartition]]) so a million-file tree schedules
  *    O(bytes/split) tasks, not O(files);
@@ -405,12 +404,13 @@ private[whisper] object WhisperPlanning {
     }
   }
 
-  /** One scan unit per surviving (file, archive). Every header is read
-   * first, because the split size comes from the whole scan
-   * ([[splitPoints]]); a plain archive above it is cut into byte-range
-   * chunks, time-ordered ones under `timeSort` ([[RingProbe]]).
-   *
-   * `probeOrdered=false` (the streaming tail) skips the per-archive
+  /** Points per split: plain archives above `min(maxPointsPerSplit, this)`
+   * are cut into byte-range chunks. A 1M-point chunk (12 MB) lets one
+   * file's few large archives feed every task slot, and it is far below
+   * the 2 GiB read buffer, so the buffer never sets the step. */
+  private val SplitPoints = 1000000L
+
+  /** `probeOrdered=false` (the streaming tail) skips the per-archive
    * rotation probe: micro-batches prune by pushed time-window predicates and
    * never consume cross-chunk ordering, so oversized `timeSort` archives
    * stay one partition there exactly as before r10.
@@ -440,66 +440,42 @@ private[whisper] object WhisperPlanning {
         case _                               => true
       }
     }
+    val step = math.min(options.maxPointsPerSplit, SplitPoints)
     val perFile = WhisperIO.parMap(liveEntries, options.planningParallelism) { entry =>
-      val gz = options.gzipFor(entry.path)
-      (entry, gz, metaFor(entry, gz).archives.filter(a => partitionSurvives(preds, entry.path, a.index)))
-    }
-    // gzip is non-splittable: one stream per file/archive, whatever its size
-    val step = splitPoints(perFile.collect { case (_, false, as) => as.map(_.points).sum }.sum, options)
-    // timeSort: chunk the ring's two sorted runs oldest-first so the archive
-    // parallelizes WITHOUT losing its per-archive order. The probes read a
-    // few slots each, concurrently like the header reads.
-    val probed = perFile.flatMap { case (e, gz, as) =>
-      if (gz || !options.timeSort || !options.orderedSplit || !probeOrdered) Nil
-      else as.filter(_.points > step).map(e -> _)
-    }
-    val probes = WhisperIO.parMap(probed, options.planningParallelism) { case (e, a) =>
-      (e.path, a.index) -> RingProbe.probe(e.path, e.len, a.offset, a.secondsPerPoint, a.points)
-    }.toMap
-    perFile.flatMap { case (e, gz, as) =>
-      val path = e.path
-      as.flatMap { a =>
+      val path = entry.path
+      val gz = options.gzipFor(path)
+      val meta = metaFor(entry, gz)
+      meta.archives.filter(a => partitionSurvives(preds, path, a.index)).flatMap { a =>
+        // an archive too big for one in-memory buffer MUST split even with
+        // timeSort on (ordering then holds per chunk, not per archive);
+        // gzip is non-splittable: one stream per file/archive regardless.
+        val mustSplit = !gz && a.points * WhisperCodec.PointSize > Int.MaxValue.toLong
+        def whole =
+          Seq(WhisperInputPartition(path, gz, a.index, a.offset, a.secondsPerPoint, a.points, 0L, a.points))
         def physicalChunks =
           (0L until a.points by step).map { start =>
             val cnt = math.min(step, a.points - start)
             WhisperInputPartition(path, gz, a.index, a.offset, a.secondsPerPoint, a.points, start, cnt)
           }
-        // an archive too big for one in-memory buffer MUST split even with
-        // timeSort on (ordering then holds per chunk, not per archive); the
-        // step is below that size, so such an archive is always over it
-        val mustSplit = a.points * WhisperCodec.PointSize > Int.MaxValue.toLong
-        def whole =
-          Seq(WhisperInputPartition(path, gz, a.index, a.offset, a.secondsPerPoint, a.points, 0L, a.points))
         if (gz || a.points <= step) whole
         else if (!options.timeSort) physicalChunks
-        else
-          probes.get((path, a.index)).flatten match {
+        else if (options.orderedSplit && probeOrdered) {
+          // timeSort: chunk the ring's two sorted runs oldest-first so the
+          // archive parallelizes WITHOUT losing its per-archive order — a
+          // file's one big archive must not become one straggler task while
+          // the other slots idle. Probe failure (all-zero, budget spent,
+          // non-dense ring detected on the probe path) keeps the pre-r10
+          // single-partition shape unless the 2 GiB buffer limit forces a
+          // split.
+          RingProbe.probe(path, entry.len, a.offset, a.secondsPerPoint, a.points) match {
             case Some(rp) => RingProbe.orderedChunks(path, a.index, a.offset, a.secondsPerPoint, a.points, rp, step)
-            // no probe (streaming tail, orderedSplit=false) or a declined one
-            // (all-zero ring, budget spent, off-grid point): the pre-r10
-            // single-partition shape unless the buffer limit forces a split
-            case None => if (mustSplit) physicalChunks else whole
+            case None     => if (mustSplit) physicalChunks else whole
           }
+        } else if (mustSplit) physicalChunks
+        else whole
       }
-    }.toArray
-  }
-
-  /** Splits per task slot: one chunk per slot balances points but not kept
-   * rows (a partly filled ring's filled run can land in one chunk), so
-   * chunks are a quarter of a slot's share. */
-  private val SplitsPerSlot = 4
-  /** Below this many points a split is not worth its task and ring probe. */
-  private val MinSplitPoints = 1000000L
-
-  /** Points per split of a scan whose splittable (plain) archives hold
-   * `points` in total: the scan's share for a quarter of a task slot, like
-   * Spark's `FilePartition.maxSplitBytes` sizes file splits from bytes per
-   * core, clamped to [[MinSplitPoints]] below and to `maxPointsPerSplit` and
-   * the 2 GiB read buffer above. A many-file tree reaches the cap, so its
-   * archives stay whole and bin-pack as before. */
-  def splitPoints(points: Long, options: WhisperOptions): Long = {
-    val cap = math.min(options.maxPointsPerSplit, Int.MaxValue.toLong / WhisperCodec.PointSize - 1)
-    math.min(cap, math.max(MinSplitPoints, points / (SplitsPerSlot.toLong * parallelism())))
+    }
+    perFile.flatten.toArray
   }
 
   /** Task slots of the session planning the scan (its `defaultParallelism`);
@@ -561,25 +537,33 @@ private[whisper] object WhisperPlanning {
  * partitions share one archive and still tile disjoint ascending time
  * windows). The format fixes each slot's timestamp up to an era:
  * `ts(i) = anchor + (i - anchorIdx)*spp  (mod spp*N)`, so ONE nonzero anchor
- * plus a binary search for the era drop `w` yields, arithmetically, a
- * planned window `[predTs(s), predTs(e))` per chunk — no boundary reads.
+ * plus a search for the era drop `w` yields, arithmetically, a planned
+ * window `[predTs(s), predTs(e))` per chunk — no boundary reads.
  *
- * The two end slots of the READABLE extent (the file length bounds it, so a
- * truncated ring reads as ending early, not as wrapping) classify the ring:
- * a newer first slot than last means it wraps, and the cut is bisected on
- * single-slot reads; otherwise it has one era and the cut is 0. A bisection
- * step that lands on a zero reads one block after it: an all-zero block is
- * the never-written gap, inside which every cut is equivalent, so the probe
- * never scans the gap itself.
+ * The probe reads 4,096-slot blocks. It keeps the newest and the oldest
+ * written slot it has seen; going round the ring from the newest to the
+ * oldest, every slot in between is either never written or continues one of
+ * the two runs, so each nonzero read there moves one end inward, and a zero
+ * or holed stretch is just stepped over. It reads both end blocks of the
+ * READABLE extent first (the file length bounds it, so a truncated ring
+ * ends early rather than wraps), then the middle block of the longest
+ * unread stretch between newest and oldest, until none is left or the
+ * budget is spent. Once nothing between them is unread the cut is exact; a
+ * long never-written gap instead leaves the budget spent with blocks of
+ * zeros sampled evenly across it, and the cut goes at the middle one of
+ * those — the gap is never scanned, and a hole inside a run draws fewer
+ * samples than the gap.
  *
- * Cost: O(log N) reads of one slot, plus at most a couple of 48 KB blocks,
- * within [[MaxReads]]. The probe DECLINES (returns None) on: all-zero or
- * unreadable archives, read-budget exhaustion, or any probed nonzero point
- * off the anchor's interval grid / outside eras {0, -1} — a sparsely-written
+ * Cost: at most [[MaxReads]] block reads of 48 KB; a dense ring needs
+ * O(log N) (about 10 for a full 1.5M-slot ring), a ring with a gap longer
+ * than the budget can read spends it all.
+ * The probe DECLINES (returns None) on: all-zero or unreadable archives, no
+ * written slot found within the budget, or any probed nonzero point off the
+ * anchor's interval grid / outside the two runs' eras — a sparsely-written
  * ring carrying stale multi-era residue is not a rotated sorted array, and
- * chunking it ordered would be wrong. Because the probe only samples (a
- * zero run inside a written run can pass for the gap), the claim is
- * additionally CHECKED at read time when the sort elision consumes it
+ * chunking it ordered would be wrong. Because the probe samples a long gap
+ * (a written run shorter than the sample spacing can hide in it), the claim
+ * is additionally CHECKED at read time when the sort elision consumes it
  * ([[WhisperScan.withWindowEnforcement]]), and every chunk still sorts its
  * own rows.
  */
@@ -626,74 +610,82 @@ private[whisper] object RingProbe {
    * call of `read` counts against [[MaxReads]]. */
   def locate(readable: Long, spp: Long, points: Long)(read: (Long, Int) => Array[Long]): Option[Probe] = {
     if (spp <= 0 || points <= 1 || spp > Long.MaxValue / points || readable < 1) return None
-    val sppN = spp * points
+    val n = points
+    val sppN = spp * n
+    // read ranges [start, end); slots past EOF count as read zeros
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    if (readable < n) seen += ((readable, n))
+    // newest (nw) and oldest (o) written slot seen; nw = -1 until one is
+    var nw, tNw, o, tO = -1L
+    def fwd(i: Long, from: Long): Long = Math.floorMod(i - from, n)
+    // slots strictly between nw and o, going forward from nw, are unknown
+    def span: Long = if (o == nw) n else fwd(o, nw)
+
+    def take(i: Long, ts: Long): Unit =
+      if (nw < 0) { nw = i; tNw = ts; o = i; tO = ts }
+      else {
+        val d = fwd(i, nw)
+        if (d > 0 && d < span) {
+          if (ts == tNw + d * spp) { nw = i; tNw = ts }
+          else if (ts == tNw + d * spp - sppN) { o = i; tO = ts }
+          else throw GiveUp
+        } else if (ts != tO + fwd(i, o) * spp) throw GiveUp // between o and nw: one run
+      }
     var reads = 0
-    def slots(start: Long, cnt: Int): Array[Long] = {
-      if (reads >= MaxReads) throw GiveUp
+    def readRange(s: Long, e: Long): Unit = {
       reads += 1
-      read(start, cnt)
+      val ts = read(s, (e - s).toInt)
+      seen += ((s, e))
+      var k = 0
+      while (k < ts.length) { if (ts(k) != 0L) take(s + k, ts(k)); k += 1 }
     }
-    def at(i: Long): Long = slots(i, 1)(0)
+    // the unknown region as linear ranges: the whole ring until a written
+    // slot is seen, then the slots strictly between nw and o
+    def region: Seq[(Long, Long)] =
+      if (nw < 0) Seq((0L, n))
+      else if (nw + span <= n) Seq((nw + 1, nw + span))
+      else Seq((nw + 1, n), (0L, nw + span - n))
+    def unread: Seq[(Long, Long)] = {
+      val sorted = seen.sortBy(_._1)
+      region.flatMap { case (s, e) =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+        var at = s
+        sorted.foreach { case (rs, re) =>
+          if (re > at && rs < e) { if (rs > at) out += ((at, rs)); at = math.max(at, re) }
+        }
+        if (at < e) out += ((at, e))
+        out
+      }
+    }
 
     try {
-      val last = readable - 1
-      val first = at(0L)
-      val lastTs = if (last == 0) first else at(last)
-      if (first == 0L || lastTs == 0L) {
-        // an unwritten end: a dense ring has not wrapped (or its older run
-        // lies past EOF), so it is one era and needs only an anchor
-        val anchor =
-          if (first != 0L) Some((0L, first))
-          else if (lastTs != 0L) Some((last, lastTs))
-          else written(last, at)
-        anchor.map { case (i, t) => Probe(0L, i, t) }
-      } else {
-        def predTs(i: Long): Long = first + i * spp
-        // every probed nonzero must sit EXACTLY in era 0 (the first slot's)
-        // or era -1 of the first slot's grid; anything else is a non-dense
-        // ring. True for era -1.
-        def older(i: Long, ts: Long): Boolean =
-          if (ts == predTs(i)) false else if (ts == predTs(i) - sppN) true else throw GiveUp
-        if (!older(last, lastTs)) Some(Probe(0L, 0L, first)) // one run, not wrapped
-        else {
-          // lo holds era 0; every nonzero from hi on is era -1 (hi is a cut)
-          var lo = 0L
-          var hi = last
-          while (hi - lo > 1) {
-            val mid = (lo + hi) >>> 1
-            val t = at(mid)
-            if (t != 0L) { if (older(mid, t)) hi = mid else lo = mid }
-            else {
-              val block = slots(mid, math.min(BlockPts.toLong, hi - mid).toInt)
-              val k = block.indexWhere(_ != 0L)
-              // all zero up to hi, or for a whole block: the gap
-              if (k < 0) return Some(Probe(mid, 0L, first))
-              if (older(mid + k, block(k))) hi = mid // zeros, then era -1: mid is in the gap
-              else lo = mid + k // a zero run inside era 0
-            }
-          }
-          Some(Probe(hi, 0L, first))
-        }
+      val head = math.min(BlockPts.toLong, readable)
+      readRange(0L, head)
+      if (readable > head) readRange(math.max(head, readable - BlockPts), readable)
+      var open = unread
+      while (open.nonEmpty && reads < MaxReads) {
+        // the middle block of the longest unread stretch, on the stretch's
+        // block grid: a written block moves an end inward (halving a dense
+        // ring's stretch), an all-zero one splits it into whole blocks, so
+        // a stretch of k blocks is read through in at most k reads
+        val (s, e) = open.maxBy { case (s, e) => e - s }
+        val from = s + (e - s - 1) / BlockPts / 2 * BlockPts
+        readRange(from, math.min(e, from + BlockPts))
+        open = unread
+      }
+      if (nw < 0) None // all zero, or no written slot found in the budget
+      else if (nw + span >= n) Some(Probe(0L, nw, tNw)) // one run across the ring's end
+      else if (open.isEmpty) Some(Probe(o, nw, tNw))
+      else {
+        // budget spent: cut in the middle of the zero blocks read between
+        // the runs
+        val zeros = seen.toSeq.flatMap { case (s, e) =>
+          val (zs, ze) = (math.max(s, nw + 1), math.min(e, o))
+          if (zs < ze) Some(zs) else None
+        }.sorted
+        if (zeros.isEmpty) None else Some(Probe(zeros(zeros.size / 2), nw, tNw))
       }
     } catch { case GiveUp => None }
-  }
-
-  /** Some written (nonzero) slot strictly inside `(0, last)`, sampled on a
-   * grid that halves its spacing each round — it finds any written run of
-   * at least 1/32 of the ring within 31 reads, without scanning zeros. */
-  private def written(last: Long, at: Long => Long): Option[(Long, Long)] = {
-    var den = 2L
-    while (den <= last) {
-      var j = 1L
-      while (j < den) {
-        val i = j * last / den
-        val t = at(i)
-        if (t != 0L) return Some((i, t))
-        j += 2
-      }
-      den *= 2
-    }
-    None
   }
 
   /** One archive's chunks in GLOBAL ascending-time order — the older run

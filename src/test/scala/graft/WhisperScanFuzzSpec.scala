@@ -409,29 +409,46 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val hts = hatch.select("timestamp").collect().map(_.getTimestamp(0).getTime)
       assert(hts.length == points && (hts sameElements hts.sorted))
 
-      // A wrapped ring with an all-zero hole inside its newer run [0, 3N/4):
-      // the probe's first bisection step lands in the hole, which it can take
-      // for the never-written gap. Elided, the sort must come out right or
-      // fail loudly; without a sort the content is complete.
-      val holeN = 400000L
-      val (holeFrom, holeLen) = (195000L, 10000L)
-      val holePath = dir.resolve("hole.wsp")
-      WhisperWriter.writeFile(holePath, FileSpec(archives = Seq(
-        ArchiveSpec(spp, holeN, filled = holeN, lastTimestamp = 1600000000L, rotation = 3 * holeN / 4))))
-      val hraf = new java.io.RandomAccessFile(holePath.toFile, "rw")
-      try {
-        hraf.seek(headerSize + holeFrom * WhisperCodec.PointSize)
-        hraf.write(new Array[Byte]((holeLen * WhisperCodec.PointSize).toInt))
-      } finally hraf.close()
-      val holed = s2.read.format("whisper").option("maxPointsPerSplit", "50000").load(holePath.toString)
-      assert(holed.rdd.getNumPartitions > 1)
-      assert(holed.count() == holeN - holeLen)
-      try {
-        val got = holed.orderBy("timestamp").select("timestamp").collect().map(_.getTimestamp(0).getTime)
-        assert(got.length == holeN - holeLen && (got sameElements got.sorted), "elided sort out of order")
-      } catch {
-        case e: org.apache.spark.SparkException =>
-          assert(rootMsg(e).contains("dense-rotation invariant"), s"unexpected: ${rootMsg(e)}")
+      // The same session over rings with zeros the writer left inside what it
+      // wrote: the ring's end slot(s), its last 10,000 slots, or a
+      // 10,000-slot hole inside the newer or the older run, of a full ring and
+      // of one whose never-written gap is longer than the probe may read.
+      // Each must still chunk, read complete, and come out sorted under the
+      // elided orderBy — a cut placed in such a hole would put rows outside
+      // their window. (n, filled, rotation): the older run is
+      // [rotation, n), the newer [0, rotation + filled - n).
+      val rings = Seq((400000L, 400000L, 300000L), (600000L, 240000L, 480000L))
+      val holed = for {
+        (n, filled, rotation) <- rings
+        (kind, holes) <- {
+          val newerEnd = rotation + filled - n
+          val olderMid = (rotation + n) / 2
+          Seq(
+            "last slot" -> Seq((n - 1, 1L)),
+            "last 10,000 slots" -> Seq((n - 10000, 10000L)),
+            "both end slots" -> Seq((0L, 1L), (n - 1, 1L)),
+            "newer-run hole" -> Seq((newerEnd / 2 - 5000, 10000L)),
+            "older-run hole" -> Seq((olderMid - 5000, 10000L)))
+        }
+      } yield (n, filled, rotation, kind, holes)
+      holed.zipWithIndex.foreach { case ((n, filled, rotation, kind, holes), i) =>
+        val hPath = dir.resolve(s"holed$i.wsp")
+        WhisperWriter.writeFile(hPath, FileSpec(archives = Seq(
+          ArchiveSpec(spp, n, filled, lastTimestamp = 1600000000L, rotation = rotation))))
+        val hraf = new java.io.RandomAccessFile(hPath.toFile, "rw")
+        try holes.foreach { case (from, len) =>
+          hraf.seek(headerSize + from * WhisperCodec.PointSize)
+          hraf.write(new Array[Byte]((len * WhisperCodec.PointSize).toInt))
+        } finally hraf.close()
+        val rows = filled - holes.map(_._2).sum
+        val ctx = s"$kind, ring ($n, $filled, $rotation)"
+        val df = s2.read.format("whisper").option("maxPointsPerSplit", "50000").load(hPath.toString)
+        assert(df.rdd.getNumPartitions > 1, s"$ctx did not split")
+        assert(df.count() == rows, s"$ctx incomplete")
+        val ordered = df.orderBy("timestamp").select("timestamp")
+        assert(!ordered.queryExecution.executedPlan.toString.contains("Sort ["), s"$ctx sort not elided")
+        val got = ordered.collect().map(_.getTimestamp(0).getTime)
+        assert(got.length == rows && (got sameElements got.sorted), s"$ctx elided sort out of order")
       }
     } finally {
       prevDefault.foreach(SparkSession.setDefaultSession)

@@ -425,7 +425,7 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         .getOrCreate()
       // 3M slots, 1.8M written and wrapped: the newer run [0, 600K), the
       // never-written gap, the older run [1.8M, 3M). Far under the 8M-point
-      // maxPointsPerSplit, so only the scan-sized split cuts it.
+      // maxPointsPerSplit, so only the 1M-point split cuts it.
       val big = dir.resolve("split3m.wsp")
       WhisperWriter.writeFile(big, FileSpec(archives = Seq(
         ArchiveSpec(60, 3000000, filled = 1800000, lastTimestamp = 1599999960L, rotation = 1800000))))

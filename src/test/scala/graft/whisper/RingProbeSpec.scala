@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import scala.util.Random
 
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.format.{WhisperCodec, WhisperWriter}
@@ -122,6 +121,37 @@ class RingProbeSpec extends AnyFunSuite {
     assert(none.isEmpty)
   }
 
+  test("wrapped rings with unwritten end slots or a hole inside either run get a correct cut") {
+    // layouts: (points, filled, rotation) — two full rings and two with a
+    // long never-written gap, the last archive 1's shape; the older run is
+    // [rotation, points), the newer [0, rotation + filled - points)
+    val layouts = Seq(
+      (400000L, 400000L, 300000L),
+      (400000L, 400000L, 100000L),
+      (1000000L, 400000L, 800000L),
+      (5256000L, 2331015L, 4000000L))
+    for {
+      (points, filled, rotation) <- layouts
+      len <- Seq(1L, 100L, 4095L, 4096L, 10000L, 50000L)
+      (kind, holes) <- {
+        val newerEnd = rotation + filled - points
+        val olderMid = rotation + (points - rotation) / 2
+        Seq(
+          "last slots" -> Seq((points - len, points)),
+          "both ends" -> Seq((0L, len), (points - len, points)),
+          "older run" -> Seq((olderMid - len / 2, olderMid - len / 2 + len)),
+          "newer run" -> Seq((newerEnd / 2 - len / 2, newerEnd / 2 - len / 2 + len)))
+      }
+    } {
+      val ring = Ring(points, filled, rotation, 60L, 1600000020L, points, holes)
+      val ctx = s"$kind hole of $len slots, ring ($points, $filled, $rotation)"
+      val (got, reads) = probe(ring)
+      assert(got.isDefined, s"$ctx declined after $reads reads")
+      assert(reads <= RingProbe.MaxReads, s"$ctx spent $reads reads")
+      assertWindows(ring, got.get, ctx)
+    }
+  }
+
   test("a probed point off the ring's interval grid declines") {
     val base = Ring(500000L, 200000L, 450000L, 10L, 1600000000L, 500000L)
     var reads = 0
@@ -135,31 +165,24 @@ class RingProbeSpec extends AnyFunSuite {
     }
     assert(got.isEmpty, s"off-grid ring got a cut after $reads reads")
   }
-
-  test("split size: a quarter of a task slot's share, clamped to [1M points, maxPointsPerSplit]") {
-    def opts(cap: Long) = WhisperOptions(new CaseInsensitiveStringMap(
-      java.util.Map.of("maxPointsPerSplit", cap.toString)))
-    val slots = 4L * WhisperPlanning.parallelism()
-    assert(WhisperPlanning.splitPoints(6898801L, opts(8000000L)) ==
-      math.min(8000000L, math.max(1000000L, 6898801L / slots)))
-    assert(WhisperPlanning.splitPoints(40000000L * slots, opts(8000000L)) == 8000000L)
-    assert(WhisperPlanning.splitPoints(0L, opts(8000000L)) == 1000000L)
-    // a cap below the floor wins: small maxPointsPerSplit still forces splits
-    assert(WhisperPlanning.splitPoints(6898801L, opts(2048L)) == 2048L)
-    // and the 2 GiB read buffer bounds any cap
-    assert(WhisperPlanning.splitPoints(Long.MaxValue / 2, opts(Long.MaxValue)) ==
-      Int.MaxValue.toLong / WhisperCodec.PointSize - 1)
-  }
 }
 
 object RingProbeSpec {
   /** One archive's ring: `filled` slots from `rotation` on, oldest first,
    * `spp` seconds apart and ending at `last`; slots from `readable` on lie
-   * past EOF. */
-  final case class Ring(points: Long, filled: Long, rotation: Long, spp: Long, last: Long, readable: Long) {
-    /** Timestamp of physical slot `p` (0 = never written or past EOF). */
+   * past EOF. A hole is a stretch the writer missed (an outage). */
+  final case class Ring(
+      points: Long,
+      filled: Long,
+      rotation: Long,
+      spp: Long,
+      last: Long,
+      readable: Long,
+      holes: Seq[(Long, Long)] = Nil) {
+    /** Timestamp of physical slot `p` (0 = never written, in one of the
+     * `[from, until)` holes, or past EOF). */
     def ts(p: Long): Long = {
-      if (p >= readable) 0L
+      if (p >= readable || holes.exists { case (f, u) => p >= f && p < u }) 0L
       else {
         val k = Math.floorMod(p - rotation, points)
         if (k < filled) last - (filled - 1 - k) * spp else 0L
