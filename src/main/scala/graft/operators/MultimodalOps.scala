@@ -333,7 +333,7 @@ object MultimodalOps {
    * The temp dir is deleted when the registry drops the entry, or at exit
    * (the registry's one exit hook closes it). */
   private def storedFixture(spark: SparkSession, tag: String, dir: String)(build: => Dataset[Asset]): String =
-    OpCache.perProcess(spark, tag, dir) {
+    OpCache.perProcess(tag, dir, OpCache.listing(spark, dir)) {
       val fixture = StoredFixture(java.nio.file.Files.createTempDirectory(tag))
       build.write.mode("overwrite").parquet(fixture.path.toString)
       fixture

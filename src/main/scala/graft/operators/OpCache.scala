@@ -1,5 +1,6 @@
 package graft.operators
 
+import java.lang.ref.WeakReference
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
@@ -9,22 +10,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /**
- * The one store of memoized operator state: every derived relation, index
- * or fixture an operator keeps between calls lives in ONE map, keyed by
- * (scope, slot, dir). The scope is a `SparkSession`, compared by reference
+ * The library's one memo registry: every derived relation, index, fixture
+ * or parsed header source kept between calls lives in ONE map, keyed by
+ * (scope, slot, key). The scope is a `SparkSession`, compared by reference
  * (two sessions never share an entry, whatever their identity hashes), or
  * the process, for values that hold no session (the IVF index, the ANN
- * regime, the stored multimodal fixtures).
+ * regime, the stored multimodal fixtures, and the Whisper source's parsed
+ * header manifests, spot-check verdicts and manifest-served file lists).
+ * The key is a dir for the operator values and a manifest path (plus the
+ * qualified patterns, for a file list) for the Whisper ones.
  *
  * BUILD RULE. A miss installs a cheap holder through `computeIfAbsent`; the
  * build runs afterwards, under the holder's own monitor, never under the
  * map's bin lock. So each key is built exactly once, concurrent callers of
  * the same key wait for that one build, callers of other keys never block,
  * and a build may look up other keys. Builds depend on keys in one acyclic
- * order — regime → IVF index → tables, and rank tables / cluster labels /
- * stored fixtures → tables — so holder monitors cannot deadlock. A build
- * that throws is not cached: its callers see the exception and the next
- * call builds afresh.
+ * order — regime → IVF index → tables, rank tables / cluster labels /
+ * stored fixtures → tables, and manifest file list → manifest parse →
+ * Hadoop conf, spot-check verdict → Hadoop conf — so holder monitors cannot
+ * deadlock. A build that throws is not cached: its callers see the
+ * exception and the next call builds afresh. A lookup whose build does I/O
+ * must first run on a driver thread, not inside a planning-pool worker: a
+ * worker holding a holder monitor through I/O that schedules nested
+ * ForkJoin work can starve the pool (the r12 planning deadlock).
  *
  * KINDS OF ENTRY, chosen by the entry point:
  *  - [[pinned]]: a persisted frame memoized per (session, slot, dir). At
@@ -34,30 +42,40 @@ import org.apache.spark.storage.StorageLevel
  *    [[persistBounded]]'s un-memoized pins share the map and the
  *    one-per-(session, slot) bound.
  *  - [[perProcess]]: a value shared by every session.
- *  - [[perSession]]: an unpinned session value — the `Tables` relations.
+ *  - [[perSession]]: an unpinned session value — the `Tables` relations and
+ *    the Whisper source's Hadoop configuration.
  *
- * STALENESS. A dir-keyed [[pinned]] or [[perProcess]] entry records the
- * dir's top-level listing (child name, length, modification time) at build
- * time and re-checks it on every hit; any difference rebuilds the entry and
- * forgets the dir's [[perSession]] relations, whose file index is as stale.
- * A rewrite that keeps every top-level child's length and time (a part
- * file replaced in place inside a directory child) is not seen. The dir is
- * listed through the session's Hadoop file system: one list request per
- * build and one per hit (on an object store, one LIST each). `perSession`
- * relations are not checked: Spark's own file index fails loudly on a
- * rewritten relation, and a per-lookup listing would tax every query.
+ * STALENESS. A [[perProcess]] or [[perSession]] entry takes a caller-supplied
+ * stamp: the entry records the stamp it was built under, and a lookup with a
+ * different stamp (compared with `==`) drops it and builds afresh, so a
+ * superseded version is never kept. A null stamp is never checked. The
+ * operator values stamp with their dir's top-level [[listing]] (child name,
+ * length, modification time), as [[pinned]] does itself; the Whisper memos
+ * stamp with the manifest's (length, modification time), stat'ed once per
+ * lookup site. A listing-stamped entry re-lists its dir on every hit (on an
+ * object store, one LIST each), and a rewrite that keeps every top-level
+ * child's length and time (a part file replaced in place inside a directory
+ * child) is not seen. A changed stamp also forgets the key's unstamped
+ * [[perSession]] values — a dir's `Tables` relations, whose file index is
+ * as stale. Unstamped values are not checked: Spark's own file index fails
+ * loudly on a rewritten relation, and a per-lookup listing would tax every
+ * query.
  *
  * LIFECYCLE. A session whose context has stopped loses its entries on the
  * next insert (its executor-side blocks died with the context, so dropping
- * the reference is the release). Pinned entries are bounded FIFO at
+ * the reference is the release), and so does a session the JVM collected:
+ * a stored key holds its session weakly, so a value that does not reach
+ * its session (a Hadoop conf) keeps no session alive that nothing else
+ * uses, such as the clone each streaming query plans in. Frames and
+ * relations reach their session and keep it. Pinned entries are bounded FIFO at
  * `maxPinned` — a JVM cycling `newSession()` on one live context never
  * stops anything — and an evicted frame is unpersisted. [[releaseAll]] is
  * the explicit end of life: it releases every pinned entry and keeps
- * session relations and process values. A dropped value that is
- * `AutoCloseable` is closed, and the process registry closes every live
- * one at JVM exit (one shutdown hook, [[closeAll]]). A build in flight is
- * never dropped: its entry is registered when the build ends, so a later
- * release covers it.
+ * session values and process values. [[release]] drops one slot, in every
+ * scope. A dropped value that is `AutoCloseable` is closed, and the process
+ * registry closes every live one at JVM exit (one shutdown hook,
+ * [[closeAll]]). A build in flight is never dropped: its entry is
+ * registered when the build ends, so a later release covers it.
  */
 class OpCache private[graft] (
     maxPinned: Int = 64,
@@ -72,41 +90,45 @@ class OpCache private[graft] (
    * miss (a build may persist its frame itself, to materialize it before
    * releasing its own intermediates). */
   private[graft] def pinned(spark: SparkSession, slot: String, dir: String)(build: => DataFrame): DataFrame =
-    lookup(new Key(spark, slot, dir), pinned = true, stampOf(spark, dir)) {
+    lookup(new Key(spark, slot, dir), pinned = true, listing(spark, dir)) {
       val df = build
       require(df.sparkSession eq spark, s"$slot: build returned a frame of another session")
       if (df.storageLevel == StorageLevel.NONE) persist(df) else df
     }.asInstanceOf[DataFrame]
 
-  /** A value shared by every session, rebuilt when `dir` changes; `spark`
-   * runs the build and supplies the Hadoop configuration for the listing. */
-  private[graft] def perProcess[V <: AnyRef](spark: SparkSession, slot: String, dir: String)(build: => V): V =
-    lookup(new Key(Process, slot, dir), pinned = false, stampOf(spark, dir))(build).asInstanceOf[V]
+  /** A value shared by every session, rebuilt when `stamp` changes (see
+   * STALENESS); a dir-keyed value passes the dir's [[listing]]. */
+  private[graft] def perProcess[V <: AnyRef](slot: String, key: String, stamp: AnyRef)(build: => V): V =
+    lookup(new Key(Process, slot, key), pinned = false, stamp)(build).asInstanceOf[V]
 
-  /** A value of one session, not checked against `dir` (see STALENESS). */
-  private[graft] def perSession[V <: AnyRef](spark: SparkSession, slot: String, dir: String)(build: => V): V =
-    lookup(new Key(spark, slot, dir), pinned = false, Unstamped)(build).asInstanceOf[V]
+  /** A value of one session, rebuilt when `stamp` changes; unstamped by
+   * default (see STALENESS). */
+  private[graft] def perSession[V <: AnyRef](spark: SparkSession, slot: String, key: String, stamp: AnyRef = null)(
+      build: => V): V =
+    lookup(new Key(spark, slot, key), pinned = false, stamp)(build).asInstanceOf[V]
 
   @annotation.tailrec
-  private def lookup(key: Key, pinned: Boolean, stampNow: () => AnyRef)(build: => AnyRef): AnyRef = {
+  private def lookup(key: Key, pinned: Boolean, stamp: AnyRef)(build: => AnyRef): AnyRef = {
     var created: Entry = null
-    val e = entries.computeIfAbsent(key, k => { created = new Entry(k, pinned, stampNow, () => build); created })
+    val e = entries.computeIfAbsent(key, k => { created = new Entry(k, pinned, stamp, () => build); created })
     val v = try e.value catch { case t: Throwable => entries.remove(key, e); throw t }
     if (e eq created) { admit(e); v }
     else {
-      val unchanged = e.unchanged(stampNow)
+      val unchanged = e.stamp == stamp
       if (unchanged && !(pinned && v.asInstanceOf[DataFrame].storageLevel == StorageLevel.NONE)) v
       else {
         drop(e)
-        if (!unchanged) entries.values.forEach(o => if (o.key.dir == key.dir && o.unstamped) drop(o))
-        lookup(key, pinned, stampNow)(build)
+        if (!unchanged) entries.values.forEach(o => if (o.key.dir == key.dir && o.stamp == null) drop(o))
+        lookup(key, pinned, stamp)(build)
       }
     }
   }
 
-  /** After a build: sweep stopped sessions, keep one pinned frame per
-   * (session, slot), and hold the bound on built pinned frames. */
+  /** After a build: hold the stored key's session weakly, sweep stopped and
+   * collected sessions, keep one pinned frame per (session, slot), and hold
+   * the bound on built pinned frames. */
   private def admit(e: Entry): Unit = {
+    e.key.weaken()
     sweep()
     if (e.pinned) {
       entries.values.forEach(o =>
@@ -118,7 +140,8 @@ class OpCache private[graft] (
 
   private def sweep(): Unit = entries.values.forEach(o => o.key.scope match {
     case s: SparkSession if stopped(s) => entries.remove(o.key, o)
-    case _ =>
+    case null                          => entries.remove(o.key, o) // its session was collected
+    case _                             =>
   })
 
   /** Remove one built entry: a pinned frame is unpersisted, a closeable
@@ -134,7 +157,7 @@ class OpCache private[graft] (
 
   private[operators] def persistBounded(slot: String, df: DataFrame): DataFrame = {
     val cached = persist(df)
-    val e = new Entry(new Key(df.sparkSession, slot, ""), pinned = true, Unstamped, () => cached)
+    val e = new Entry(new Key(df.sparkSession, slot, ""), pinned = true, null, () => cached)
     e.value
     // Same-plan predecessor (repeated call on the same dir) SHARES the cache
     // entry — unpersisting it would evict the relation just persisted
@@ -158,10 +181,11 @@ class OpCache private[graft] (
   /**
    * End of life: unpersist and forget every pinned entry (memoized rank and
    * label tables, persistBounded pins), across all sessions and slots.
-   * Keeps the `Tables` relations and the process values (IVF index, ANN
-   * regime, stored fixtures). Idempotent; call it when no query is using
-   * the pinned frames — an in-flight query would recompute (or, through a
-   * released localCheckpoint, fail) instead of reading them.
+   * Keeps the session values (`Tables` relations, the Whisper Hadoop conf)
+   * and the process values (IVF index, ANN regime, stored fixtures, Whisper
+   * manifest parses, verdicts and file lists). Idempotent; call it when no
+   * query is using the pinned frames — an in-flight query would recompute
+   * (or, through a released localCheckpoint, fail) instead of reading them.
    */
   def releaseAll(): Unit = entries.values.forEach(e => if (e.pinned) drop(e))
 
@@ -194,50 +218,62 @@ object OpCache extends OpCache(64, _.sparkContext.isStopped) {
   /** Identity key: equal iff the SAME scope object, slot and dir. The
    * cached identity hash keeps hashing O(1); equals compares the scope by
    * reference, so a hash collision degrades to a bucket scan, never a
-   * wrong hit. */
-  private final class Key(val scope: AnyRef, val slot: String, val dir: String) {
-    override val hashCode: Int = (System.identityHashCode(scope) * 31 + slot.hashCode) * 31 + dir.hashCode
+   * wrong hit. A stored key holds a session scope weakly (see LIFECYCLE);
+   * a lookup's probe key holds it strongly and allocates no reference. */
+  private final class Key(scope0: AnyRef, val slot: String, val dir: String) {
+    override val hashCode: Int = (System.identityHashCode(scope0) * 31 + slot.hashCode) * 31 + dir.hashCode
+    @volatile private var ref: AnyRef = scope0
+
+    /** The scope, or null once a weakly held session was collected. */
+    def scope: AnyRef = ref match {
+      case w: WeakReference[AnyRef @unchecked] => w.get
+      case s                                   => s
+    }
+
+    /** Hold a session scope weakly from now on (the key was stored). */
+    def weaken(): Unit = ref match {
+      case s: SparkSession => ref = new WeakReference[AnyRef](s)
+      case _               =>
+    }
+
     override def equals(o: Any): Boolean = o match {
-      case k: Key => (k.scope eq scope) && k.slot == slot && k.dir == dir
+      case k: Key => (k eq this) || { val s = scope; s != null && (k.scope eq s) && k.slot == slot && k.dir == dir }
       case _      => false
     }
   }
 
   private val inserts = new AtomicLong()
 
-  /** The holder: builds at most once, under its own monitor. A failed build
-   * is rethrown to the callers already waiting on it, never retried here —
-   * its first caller drops the holder, so the next call builds afresh. */
-  private final class Entry(val key: Key, val pinned: Boolean, stampNow: () => AnyRef, build: () => AnyRef) {
+  /** The holder: builds at most once, under its own monitor, and keeps the
+   * stamp its caller supplied. The build closure is dropped once it has
+   * run, so an entry does not keep what its build captured (a plan's file
+   * list, a session) alive beside the value. A failed build is rethrown to
+   * the callers already waiting on it, never retried here — its first
+   * caller drops the holder, so the next call builds afresh. */
+  private final class Entry(val key: Key, val pinned: Boolean, val stamp: AnyRef, private var build: () => AnyRef) {
     val seq: Long = inserts.incrementAndGet()
     @volatile private var v: AnyRef = _
     private var failure: Throwable = _
-    private var stamp: AnyRef = _
 
     def value: AnyRef = {
       if (v == null) synchronized {
         if (failure != null) throw failure
         if (v == null)
-          try { stamp = stampNow(); v = build() }
+          try v = build()
           catch { case t: Throwable => failure = t; throw t }
+          finally build = null
       }
       v
     }
 
     /** The built value, or null while the build runs. */
     def built: AnyRef = v
-    def unstamped: Boolean = stampNow eq Unstamped
-    /** The dir still lists as it did at build time (call after [[value]]). */
-    def unchanged(now: () => AnyRef): Boolean = unstamped || stamp == now()
   }
 
-  private val Unstamped: () => AnyRef = () => null
-
-  private def stampOf(spark: SparkSession, dir: String): () => AnyRef = () => listing(spark, dir)
-
   /** (name, length, modification time) of each child of `dir`, sorted, from
-   * one list request; empty when the dir cannot be listed. */
-  private def listing(spark: SparkSession, dir: String): Seq[(String, Long, Long)] =
+   * one list request; empty when the dir cannot be listed. The stamp of a
+   * dir-keyed entry. */
+  private[graft] def listing(spark: SparkSession, dir: String): Seq[(String, Long, Long)] =
     try {
       val path = new org.apache.hadoop.fs.Path(dir)
       path.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(path)

@@ -181,7 +181,7 @@ object VectorOps {
   /** Built once per (process, dir) in [[OpCache]]; rebuilt when the
    * dir's listing changes. */
   private def ivfIndex(spark: SparkSession, dir: String): IvfIndex =
-    OpCache.perProcess(spark, "ivf", dir)(buildIvfIndex(spark, dir))
+    OpCache.perProcess("ivf", dir, OpCache.listing(spark, dir))(buildIvfIndex(spark, dir))
 
   private def buildIvfIndex(spark: SparkSession, dir: String): IvfIndex = {
     {
@@ -348,7 +348,7 @@ object VectorOps {
   final val RegimeThreshold = 0.75
 
   def calibrateRegime(spark: SparkSession, dir: String): String =
-    OpCache.perProcess(spark, "regime", dir) {
+    OpCache.perProcess("regime", dir, OpCache.listing(spark, dir)) {
       val rows = annRecall(spark, dir, k = 10, nprobe = 4, panel = 8).collect()
       val recall =
         if (rows.isEmpty) 0.0

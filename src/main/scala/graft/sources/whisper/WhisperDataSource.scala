@@ -18,6 +18,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.format.WhisperCodec
 import graft.format.WhisperCodec.FileMeta
+import graft.operators.OpCache
 
 /**
  * DataSource V2 provider: `spark.read.format("whisper").load(path...)`.
@@ -70,62 +71,42 @@ object WhisperIO {
    * a bare `new Configuration()` would silently drop them. Driver side uses
    * the session's hadoopConf; executor side rebuilds from SparkEnv's conf.
    *
-   * MEMOIZED per (active session | executor JVM): the scan's hot paths call
-   * this once per FILE (header planning) and once per UNIT (decode open),
-   * and `sessionState.newHadoopConf()` clones the full Configuration — XML
-   * resource re-parse — per call. At 100k files that clone dominated the
-   * whole planning wall (~1.6 ms/file before: BENCH_NOTES "Driver-side
-   * planning at extreme file counts"). Concurrent READS of one Configuration are safe (its
-   * store is a synchronized Properties); the scan never writes to it.
+   * MEMOIZED in [[OpCache]] under [[HadoopConfSlot]]: per session on the
+   * driver, per process on executors (no session is active there). The
+   * scan's hot paths call this once per FILE (header planning) and once per
+   * UNIT (decode open), and `sessionState.newHadoopConf()` clones the full
+   * Configuration — XML resource re-parse — per call. At 100k files that
+   * clone dominated the whole planning wall (~1.6 ms/file before:
+   * BENCH_NOTES "Driver-side planning at extreme file counts"). Concurrent
+   * READS of one Configuration are safe (its store is a synchronized
+   * Properties); the scan never writes to it.
    *
-   * The memo is a small per-session map (weak session keys — a stopped
-   * session's entry is GC-reclaimable), so two sessions interleaving on one
-   * driver each keep their own conf instead of thrashing a single slot
-   * (ADVICE r11). The conf is FROZEN at a session's first whisper scan:
-   * runtime `spark.conf.set("spark.hadoop.*", ...)` changes after that
-   * (e.g. rotating object-store credentials mid-session) are not picked up
-   * automatically — call [[invalidateHadoopConf]] after such a change (the
-   * alternative, fingerprinting the session's runtime conf per call, would
-   * reintroduce the per-file cost the memo exists to remove). Executor JVMs
-   * key on null and build once from SparkEnv. */
-  private val confCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[AnyRef, Configuration]())
-  private val NullKey = new Object // WeakHashMap key for the executor-JVM case
-  def hadoopConf(): Configuration = {
-    val key: AnyRef = org.apache.spark.sql.SparkSession.getActiveSession.getOrElse(NullKey)
-    val cached = confCache.get(key)
-    if (cached != null) cached
-    else {
-      val conf = buildHadoopConf(key)
-      confCache.put(key, conf)
-      conf
-    }
-  }
-
-  /** Drop the memoized hadoop conf for the active session (all sessions when
-   * none is active) so the next whisper I/O rebuilds it from the session's
-   * CURRENT runtime conf — the explicit refresh hook for mid-session
-   * `spark.hadoop.*` changes such as credential rotation. */
-  def invalidateHadoopConf(): Unit =
+   * The conf is FROZEN at a session's first whisper I/O: runtime
+   * `spark.conf.set("spark.hadoop.*", ...)` changes after that (e.g.
+   * rotating object-store credentials mid-session) are not picked up until
+   * `OpCache.release(WhisperIO.HadoopConfSlot)`, which drops every
+   * session's conf (each rebuilds on its next use). Fingerprinting the
+   * session's runtime conf per call would reintroduce the per-file cost the
+   * memo exists to remove. */
+  def hadoopConf(): Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) => confCache.remove(s)
-      case None    => confCache.clear()
+      case Some(s) => OpCache.perSession(s, HadoopConfSlot, "")(s.sessionState.newHadoopConf())
+      case None    => OpCache.perProcess(HadoopConfSlot, "", null)(executorHadoopConf())
     }
 
-  private def buildHadoopConf(sessionOrNull: AnyRef): Configuration =
-    sessionOrNull match {
-      case s: org.apache.spark.sql.SparkSession => s.sessionState.newHadoopConf()
-      case _ =>
-        val conf = new Configuration()
-        val env = org.apache.spark.SparkEnv.get
-        if (env != null) {
-          env.conf.getAll.foreach { case (k, v) =>
-            if (k.startsWith("spark.hadoop.")) conf.set(k.stripPrefix("spark.hadoop."), v)
-          }
-        }
-        conf
+  /** The [[OpCache]] slot of the memoized Hadoop configuration. */
+  val HadoopConfSlot = "whisper.hadoopConf"
+
+  private def executorHadoopConf(): Configuration = {
+    val conf = new Configuration()
+    val env = org.apache.spark.SparkEnv.get
+    if (env != null) {
+      env.conf.getAll.foreach { case (k, v) =>
+        if (k.startsWith("spark.hadoop.")) conf.set(k.stripPrefix("spark.hadoop."), v)
+      }
     }
+    conf
+  }
 
   /** The user-supplied path patterns, un-expanded: a single `path` or a
    * JSON `paths` array (DataFrameReader.load(paths*) passes the latter). The
@@ -297,22 +278,20 @@ object WhisperIO {
    * producing exactly the rows a post-deletion walk would have) until
    * `manifest --update` runs. The per-plan content spot check still
    * guards the served headers themselves.
+   *
+   * The SERVE phase is an [[OpCache]] process entry per (manifest path +
+   * qualified patterns), stamped by the manifest version: iterating a
+   * million-entry map, pattern-matching every path, allocating the
+   * FileEntry list, and sorting it is pure driver CPU that measured ~3.7 s
+   * per call at 1M entries (r16 decomposition) — and a steady-state
+   * streaming trigger paid it EVERY trigger even after the parse and the
+   * bin-packed plan were memoized. Inputs are deterministic per manifest
+   * version, so the sorted entry list is kept exactly like the parse (one
+   * manifest stat per call, shared with the parse; a refreshed manifest
+   * replaces the entry). Entries are immutable and share the parse's path
+   * strings; the reconcile sweep runs per call ON TOP of the memoized
+   * list, so store freshness is untouched.
    */
-  /** The SERVE phase of [[manifestListing]] memoized per (manifest path +
-   * qualified patterns, manifest version): iterating a million-entry map,
-   * pattern-matching every path, allocating the FileEntry list, and
-   * sorting it is pure driver CPU that measured ~3.7 s per call at 1M
-   * entries (r16 decomposition) — and a steady-state streaming trigger
-   * paid it EVERY trigger even after the parse and the bin-packed plan
-   * were memoized. Inputs are deterministic per manifest version, so the
-   * sorted entry list is cached exactly like the parse ([[WhisperManifest
-   * .load]]'s (len, mtime) stamp, replace-on-refresh so superseded
-   * versions are not stranded). Entries are immutable and share the
-   * parse's path strings; the reconcile sweep runs per call ON TOP of the
-   * memoized list, so store freshness is untouched. */
-  private val listingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), Seq[FileEntry])]()
-
   def manifestListing(patterns: Seq[String], options: WhisperOptions): Seq[FileEntry] = {
     require(options.headerManifest.nonEmpty, "manifestListing requires headerManifest")
     // qualified patterns: pure path arithmetic, no store round trips
@@ -321,21 +300,14 @@ object WhisperIO {
       p.getFileSystem(hadoopConf()).makeQualified(p).toString
     }
     val manifestPath = options.effectiveManifest
-    val version =
-      try {
-        val p = new HPath(manifestPath)
-        val st = p.getFileSystem(hadoopConf()).getFileStatus(p)
-        (st.getLen, st.getModificationTime)
-      } catch { case scala.util.control.NonFatal(_) => null }
+    val version = WhisperManifest.version(manifestPath)
     val cacheKey = manifestPath + "\u0000" + quals.mkString("\u0001")
-    val hit = if (version == null) null else listingCache.get(cacheKey)
     val served: Seq[FileEntry] =
-      if (hit != null && hit._1 == version) hit._2
-      else {
+      WhisperManifest.perVersion(WhisperManifest.ListingSlot, cacheKey, version) {
         // sharded streams load their own 1/n manifest file (r15) — the
         // serve below then tiles by construction; reconcile ADDS are
         // shard-filtered at the end so a store file never plans twice
-        val manifest = WhisperManifest.load(manifestPath)
+        val manifest = WhisperManifest.load(manifestPath, version)
         val globs = quals.map(q =>
           if (new org.apache.hadoop.fs.GlobPattern(q).hasWildcard)
             Some(new org.apache.hadoop.fs.GlobPattern(q))
@@ -360,11 +332,9 @@ object WhisperIO {
           }
         // a VECTOR (IndexedSeq), sorted: the reconcile fast path binary-
         // searches it, and sorted order is the deletion-range contract
-        val built = manifest.iterator.collect {
+        manifest.iterator.collect {
           case (path, e) if matches(path) => FileEntry(path, mtimeMs = -1L, len = e.len)
         }.toVector.sortBy(_.path)
-        if (version != null) listingCache.put(cacheKey, (version, built))
-        built
       }
     // bounded store reconcile: only non-glob DIRECTORY patterns (the flat
     // prefix target); glob patterns are served purely from the manifest
@@ -401,7 +371,6 @@ object WhisperIO {
         case ((acc, sorted), root) =>
           val r = reconcileRoot(acc, root, options.manifestReconcileFiles,
             options.planningParallelism, owns, shardN, mtimesUnused, sorted,
-            options.manifestReconcilePageBudget,
             cacheKey + "\u0002" + String.valueOf(version) + "\u0002" + root)
           (r, sorted && (r eq acc))
       }
@@ -416,7 +385,7 @@ object WhisperIO {
   /** Persistent roaming LIST cursor for the SHARDED manifest reconcile
    * (VERDICT r16 watch #2): one continuation iterator per (stream cache
    * key, root) surviving across micro-batch triggers, so each trigger
-   * consumes `pageBudget * limit` entries and the directory is swept
+   * consumes one page of `limit` entries and the directory is swept
    * round-robin — the continuation-token shape object stores serve
    * natively. `lastName` is the window's exclusive lower bound for the
    * next trigger's deletion range. Bounded map; an entry holds only a
@@ -453,22 +422,20 @@ object WhisperIO {
    * n-pages-per-trigger owned-coverage sweep): the consumer owns ~1/shardN
    * of the store's entries and sweeps the directory with a PERSISTENT
    * ROAMING CURSOR instead of re-listing the same prefix — each call
-   * consumes up to `pageBudget * limit` entries CONTINUING where the
+   * consumes up to `limit` entries (one page) CONTINUING where the
    * previous trigger's window ended (the continuation-token shape object
-   * stores serve natively), so per-trigger LIST cost is flat (budget
-   * pages) and full-directory drift coverage is EVENTUAL: a new, deleted,
-   * or changed file is surfaced within one full sweep — at most
-   * ceil(dirEntries / (pageBudget * limit)) triggers after the sweep that
-   * snapshotted before the change finishes (see the discovery-latency
-   * spec). Deletions are ranged per WINDOW, (windowStart, lastListed],
-   * both bounds meaningful only on sorted listings; `pageBudget = shardN`
-   * restores r15's per-trigger owned coverage on top of the roaming
-   * cursor. */
+   * stores serve natively), so per-trigger LIST cost is flat and
+   * full-directory drift coverage is EVENTUAL: a new, deleted, or changed
+   * file is surfaced within one full sweep — at most
+   * ceil(dirEntries / limit) triggers after the sweep that snapshotted
+   * before the change finishes (see the discovery-latency spec). Deletions
+   * are ranged per WINDOW, (windowStart, lastListed], both bounds
+   * meaningful only on sorted listings. */
   private def reconcileRoot(
       entries: Seq[FileEntry], root: String, limit: Int, parallelism: Int,
       owns: String => Boolean = _ => true, shardN: Int = 1,
       mtimesUnused: Boolean = false, sortedInput: Boolean = true,
-      pageBudget: Int = 1, cursorKey: String = null): Seq[FileEntry] = {
+      cursorKey: String = null): Seq[FileEntry] = {
     val rp = new HPath(root)
     val fs = rp.getFileSystem(hadoopConf())
     val seen = mutable.LinkedHashMap[String, FileEntry]() // direct whisper children listed
@@ -488,8 +455,7 @@ object WhisperIO {
           remembered = cur.overrides
           if (cur.it == null) { cur.it = fs.listStatusIterator(rp); cur.lastName = "" }
           windowStart = cur.lastName
-          val cap = pageBudget.toLong * limit
-          while (cur.it.hasNext && consumed < cap) {
+          while (cur.it.hasNext && consumed < limit) {
             val st = cur.it.next()
             consumed += 1
             val name = st.getPath.getName
@@ -667,17 +633,16 @@ object WhisperIO {
     try {
       if (gzip) {
         val gin = new GZIPInputStream(in)
-        // decompressed size: header first, then count remaining bytes
-        val headBuf = new Array[Byte](64 * 1024)
-        val headLen = WhisperCodec.readFully(gin, headBuf, headBuf.length)
-        var total = headLen.toLong
+        // decompressed size: the header, then the count of the remaining bytes
+        val meta = WhisperCodec.readMeta(gin, pathStr, -1L)
+        var total = meta.headerSize
         val skipBuf = new Array[Byte](1 << 20)
         var n = 0
         while (n >= 0) {
           n = gin.read(skipBuf)
           if (n > 0) total += n
         }
-        WhisperCodec.parseMeta(headBuf.take(headLen), pathStr, total)
+        meta.copy(fileSizeActual = total)
       } else {
         WhisperCodec.readMeta(in, pathStr, onDiskSize)
       }

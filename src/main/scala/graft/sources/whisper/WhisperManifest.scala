@@ -9,6 +9,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 
 import graft.format.WhisperCodec
 import graft.format.WhisperCodec.{ArchiveMeta, FileMeta}
+import graft.operators.OpCache
 
 /**
  * Header manifest: one JSONL(.gz) file mapping whisper path -> (file length,
@@ -251,111 +252,98 @@ object WhisperManifest {
         x.offset == y.offset && x.secondsPerPoint == y.secondsPerPoint && x.points == y.points
       }
 
+  /** Re-read each sampled header and compare it with `expected` on the
+   * fields planning consumes ([[sameHeader]]); the one header check of the
+   * manifest spot check and the streaming tail's cache revalidation, each of
+   * which supplies its own sample, seed and `warning`. Up to `sample.size`
+   * header GETs, latency-hidden by the planning pool. A sampled file DELETED
+   * from the store counts as agreement: it is not a re-layout — under
+   * manifestListing it is the expected between-refreshes state (plan and
+   * decode tolerate it as empty), under walk mode a benign walk/check race —
+   * and discarding the manifest or cache over it would force a full fresh
+   * sweep for nothing. Prints `warning` on any divergence. */
+  private[whisper] def headersAgree(
+      sample: Seq[WhisperIO.FileEntry],
+      expected: WhisperIO.FileEntry => FileMeta,
+      parallelism: Int,
+      gzipFor: String => Boolean)(warning: => String): Boolean = {
+    val ok = WhisperIO.parMap(sample, parallelism) { e =>
+      try sameHeader(WhisperIO.readMetaHeaderOnly(e.path, gzipFor(e.path), e.len), expected(e))
+      catch { case _: java.io.FileNotFoundException => true }
+    }.forall(identity)
+    if (!ok) System.err.println(warning)
+    ok
+  }
+
+  /** [[OpCache]] slots of the three per-version manifest memos. */
+  private[whisper] val ParseSlot = "whisper.manifest"
+  private[whisper] val VerdictSlot = "whisper.verdict"
+  private[whisper] val ListingSlot = "whisper.listing"
+
+  /** The manifest's version, (length, modification time), from one stat;
+   * null when the stat fails. */
+  private[whisper] def version(manifestPath: String): (Long, Long) =
+    try {
+      val p = new HPath(manifestPath)
+      val st = p.getFileSystem(WhisperIO.hadoopConf()).getFileStatus(p)
+      (st.getLen, st.getModificationTime)
+    } catch { case scala.util.control.NonFatal(_) => null }
+
+  /** `build` memoized as an [[OpCache]] process entry per (slot, key),
+   * stamped by a manifest `version`: a refreshed manifest REPLACES the
+   * entry, so no superseded version — a million-entry parse is hundreds of
+   * MB — stays reachable on a long-lived driver. An unversionable manifest
+   * (null: its stat failed) builds uncached. */
+  private[whisper] def perVersion[V <: AnyRef](slot: String, key: String, version: (Long, Long))(build: => V): V =
+    if (version == null) build else OpCache.perProcess(slot, key, version)(build)
+
   /** Content spot check against the same-length re-layout hole (ADVICE r12,
    * see the staleness scaladoc): re-read `k` manifest-served headers and
    * compare content. Returns false — DISCARD THE MANIFEST FOR THIS PLAN —
    * on any mismatch. The sample is deterministic PER MANIFEST VERSION
-   * (murmur-stride seeded by the manifest file's (len, mtime)): plans over
-   * one manifest are reproducible, while every refresh — the daily
-   * `--update` — rotates which k paths get checked, so repeated refresh
-   * cycles sweep coverage across the tree instead of re-checking the same
-   * handful forever. The sample size is GUARANTEED min(k, served) — see
-   * [[sampleForCheck]]. Cost is <= k header GETs, latency-hidden by the
-   * planning pool, plus one driver-side stat of the manifest itself. */
+   * (murmur-stride seeded by the manifest's (len, mtime), or by its path
+   * when unversionable): plans over one manifest are reproducible, while
+   * every refresh — the daily `--update` — rotates which k paths get
+   * checked, so repeated refresh cycles sweep coverage across the tree
+   * instead of re-checking the same handful forever. The sample size is
+   * GUARANTEED min(k, served) — see [[sampleForCheck]].
+   *
+   * The verdict is memoized PER MANIFEST VERSION (ADVICE r13) under
+   * [[VerdictSlot]]: re-running the deterministic check on every plan —
+   * and, worse, on every streaming TRIGGER, which constructs its header
+   * source per planInputPartitions call — paid up to k header GETs each
+   * time while buying nothing the version's first run hadn't established.
+   * A refreshed manifest re-verifies with a rotated sample; a DISTRUSTED
+   * verdict memoizes too — the manifest stays discarded until regenerated,
+   * exactly what the warning tells the operator to do. A store-side
+   * re-layout that lands AFTER a version's first check is invisible to
+   * batch plans until the manifest refreshes (daily --update = daily
+   * re-verify). Long-lived STREAMS close that window themselves: the
+   * periodic header-cache revalidation ([[WhisperMicroBatchStream]],
+   * `streamRevalidateTriggers`) releases the verdict on any divergence so
+   * the next plan re-checks against the store. */
   private[whisper] def spotCheck(
       manifestPath: String,
       manifest: Map[String, Entry],
       candidates: Seq[WhisperIO.FileEntry],
       k: Int,
       parallelism: Int,
-      gzipFor: String => Boolean): Boolean = {
-    if (k <= 0) return true
-    val served = candidates.filter(e => manifest.get(e.path).exists(_.len == e.len))
-    if (served.isEmpty) return true
-    val seed = try {
-      val p = new HPath(manifestPath)
-      val st = p.getFileSystem(WhisperIO.hadoopConf()).getFileStatus(p)
-      (st.getLen ^ st.getModificationTime).toInt
-    } catch {
-      // a failed manifest stat must not void the documented per-version
-      // rotation into a fixed seed-0 sample forever (ADVICE r13): fall back
-      // to a path-derived seed — stable, but at least not globally shared
-      case scala.util.control.NonFatal(_) =>
-        scala.util.hashing.MurmurHash3.stringHash(manifestPath)
-    }
-    val sample = sampleForCheck(served, k, seed)
-    val ok = WhisperIO.parMap(sample, parallelism) { e =>
-      try sameHeader(WhisperIO.readMetaHeaderOnly(e.path, gzipFor(e.path), e.len),
-        manifest(e.path).meta)
-      catch {
-        // a sampled file DELETED from the store is not a re-layout: under
-        // manifestListing it is the expected between-refreshes state (the
-        // scan tolerates it as empty); under walk mode it is a benign
-        // walk/check race. Either way, discarding the whole manifest over
-        // it would force a full fresh sweep for nothing.
-        case _: java.io.FileNotFoundException => true
-      }
-    }.forall(identity)
-    if (!ok)
-      System.err.println(
+      gzipFor: String => Boolean,
+      version: (Long, Long)): Boolean =
+    k <= 0 || perVersion(VerdictSlot, manifestPath, version) {
+      val served = candidates.filter(e => manifest.get(e.path).exists(_.len == e.len))
+      // a failed manifest stat must not void the per-version rotation into
+      // a fixed seed-0 sample forever (ADVICE r13): fall back to a
+      // path-derived seed — stable, but at least not globally shared
+      val seed =
+        if (version == null) scala.util.hashing.MurmurHash3.stringHash(manifestPath)
+        else (version._1 ^ version._2).toInt
+      java.lang.Boolean.valueOf(headersAgree(
+        sampleForCheck(served, k, seed), e => manifest(e.path).meta, parallelism, gzipFor)(
         s"WARN WhisperManifest: header content diverged from manifest $manifestPath under an " +
           s"UNCHANGED file length (same-length re-layout); ignoring the manifest for this plan " +
-          s"— regenerate it with `graft.Main manifest` (a length-diff --update cannot see this)")
-    ok
-  }
-
-  /** [[spotCheck]] verdict memoized PER MANIFEST VERSION (ADVICE r13): the
-   * check is deterministic per version (seed = the manifest's (len, mtime)),
-   * so re-running it on every plan — and, worse, on every streaming TRIGGER,
-   * which constructs its header source per planInputPartitions call — paid
-   * up to k header GETs each time while buying nothing the version's first
-   * run hadn't already established. One check per (manifest version, JVM):
-   * a refreshed manifest (new len/mtime) re-verifies with a rotated sample;
-   * a DISTRUSTED verdict memoizes too — the manifest stays discarded until
-   * regenerated, exactly what the warning tells the operator to do.
-   *
-   * The residual trade is honest: a store-side re-layout that lands AFTER
-   * a version's first check is invisible to batch plans until the manifest
-   * refreshes (daily --update = daily re-verify). Long-lived STREAMS close
-   * that window themselves — the periodic header-cache revalidation
-   * ([[WhisperMicroBatchStream]], `streamRevalidateTriggers`) calls
-   * [[invalidateVerdict]] on any divergence so the next plan re-checks
-   * against the store. Unversionable manifests (stat fails) fall through
-   * to an uncached check. get + put, not computeIfAbsent — the miss path
-   * does header I/O (the CHM bin-lock pitfall, r12). */
-  private val verdictCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), Boolean)]()
-
-  private[whisper] def spotCheckCached(
-      manifestPath: String,
-      manifest: Map[String, Entry],
-      candidates: Seq[WhisperIO.FileEntry],
-      k: Int,
-      parallelism: Int,
-      gzipFor: String => Boolean): Boolean = {
-    if (k <= 0) return true
-    val version =
-      try {
-        val p = new HPath(manifestPath)
-        val st = p.getFileSystem(WhisperIO.hadoopConf()).getFileStatus(p)
-        (st.getLen, st.getModificationTime)
-      } catch { case scala.util.control.NonFatal(_) => null }
-    if (version == null)
-      return spotCheck(manifestPath, manifest, candidates, k, parallelism, gzipFor)
-    val hit = verdictCache.get(manifestPath)
-    if (hit != null && hit._1 == version) hit._2
-    else {
-      val v = spotCheck(manifestPath, manifest, candidates, k, parallelism, gzipFor)
-      verdictCache.put(manifestPath, (version, v))
-      v
-    }
-  }
-
-  /** Forget the memoized spot-check verdict for one manifest (no-op on "")
-   * — called by the streaming tail when its own revalidation observes the
-   * store diverging under an unchanged manifest version. */
-  def invalidateVerdict(manifestPath: String): Unit =
-    if (manifestPath.nonEmpty) verdictCache.remove(manifestPath)
+          s"— regenerate it with `graft.Main manifest` (a length-diff --update cannot see this)"))
+    }.booleanValue
 
   /** Deterministic verification sample: GUARANTEED min(k, n) entries
    * (ADVICE r13 — the plain murmur-stride filter could select ZERO files
@@ -488,35 +476,14 @@ object WhisperManifest {
     } finally pool.shutdown()
   }
 
-  /** [[loadRaw]] memoized PER PATH with the manifest's (length, mtime) as
-   * the version stamp: planning may run many times per session over the
+  /** [[loadRaw]] memoized PER PATH under [[ParseSlot]], stamped by the
+   * manifest's version: planning may run many times per session over the
    * same manifest, and a million-entry parse should be paid once, not per
-   * query. A rewritten manifest (new length/mtime) REPLACES the entry —
-   * keying the map by (path, len, mtime) instead would strand every
-   * superseded version's fully-parsed Map in the cache forever, a
-   * hundreds-of-MB leak per daily refresh on a long-lived driver.
-   *
-   * get + put, NOT computeIfAbsent: the miss path is manifest I/O, and a
-   * ConcurrentHashMap mapping function that blocks trips the JDK's
-   * "Recursive update" guard when another key lands in the same bin while
-   * the reservation is held (observed twice this round — here and in the
-   * micro-batch header cache) besides serializing same-bin loads. A raced
-   * duplicate parse is idempotent (last writer wins; both parsed the same
-   * version or a newer one, either of which is valid to serve). */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), Map[String, Entry])]()
+   * query. Concurrent cold plans of one manifest share ONE parse (the
+   * registry builds each key once, outside its map's bin lock). */
+  def load(path: String): Map[String, Entry] = load(path, version(path))
 
-  def load(path: String): Map[String, Entry] = {
-    val p = new HPath(path)
-    val fs = p.getFileSystem(WhisperIO.hadoopConf())
-    val st = fs.getFileStatus(p)
-    val version = (st.getLen, st.getModificationTime)
-    val hit = cache.get(path)
-    if (hit != null && hit._1 == version) hit._2
-    else {
-      val m = loadRaw(path)
-      cache.put(path, (version, m))
-      m
-    }
-  }
+  /** [[load]] at a `version` the caller stat'ed once for all its lookups. */
+  private[whisper] def load(path: String, version: (Long, Long)): Map[String, Entry] =
+    perVersion(ParseSlot, path, version)(loadRaw(path))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
 
+import graft.operators.OpCache
+
 /**
  * Streaming tail of Whisper files: `spark.readStream.format("whisper")`.
  *
@@ -90,11 +92,12 @@ class WhisperMicroBatchStream(
    * and invalidates the manifest's memoized spot-check verdict, so the
    * next plan re-reads fresh and re-verifies against the store instead of
    * waiting for a restart. A manifest-backed stream gets the batch
-   * content check via [[WhisperManifest.spotCheckCached]] once per
-   * manifest VERSION — the previous per-trigger re-check bought nothing
-   * in steady state and cost up to k header GETs every trigger (ADVICE
-   * r13); the steady-state residue is now two memoized manifest stats
-   * per trigger, zero header GETs. The directory walk already carries
+   * content check via [[WhisperManifest.spotCheck]] once per manifest
+   * VERSION — the previous per-trigger re-check bought nothing in steady
+   * state and cost up to k header GETs every trigger (ADVICE r13); a
+   * trigger that rebuilds its base plan now pays one manifest stat for
+   * the parse and the verdict together (plus one for the file list under
+   * manifestListing), zero header GETs. The directory walk already carries
    * each file's length ([[WhisperIO.FileEntry]]); no extra I/O. Files
    * that APPEAR mid-stream are read on their first trigger.
    * Memory: one FileMeta (~100 B) per ACTIVE path — idle-pruned files never
@@ -156,32 +159,20 @@ class WhisperMicroBatchStream(
    * pool spins up — same eager stance as the manifest resolution below. */
   private def revalidateMetaCache(live: Seq[WhisperIO.FileEntry], trigger: Long): Unit = {
     val servedByCache = live.filter(e => metaCache.containsKey((e.path, e.len)))
-    if (servedByCache.isEmpty) return
     val sample = WhisperManifest.sampleForCheck(
       servedByCache, options.manifestSpotCheck, seed = trigger.toInt)
-    val ok = WhisperIO.parMap(sample, options.planningParallelism) { e =>
-      try WhisperManifest.sameHeader(
-        WhisperIO.readMetaHeaderOnly(e.path, options.gzipFor(e.path), e.len),
-        metaCache.get((e.path, e.len)))
-      catch {
-        // a sampled file DELETED from the store is not a re-layout — under
-        // manifestListing it is the documented between-refreshes steady
-        // state (the plan and decode paths tolerate it as empty; r15: the
-        // stream's metaFor caches manifest-served metas too, so deleted
-        // files' keys sit in metaCache and the rotating sample eventually
-        // lands on one). Same stance as WhisperManifest.spotCheck: a
-        // missing file must not crash the stream or void the cache.
-        case _: java.io.FileNotFoundException => true
-      }
-    }.forall(identity)
+    // a deleted sampled file counts as agreement: under manifestListing the
+    // stream's metaFor caches manifest-served metas too, so deleted files'
+    // keys sit in metaCache and the rotating sample eventually lands on one
+    val ok = WhisperManifest.headersAgree(sample, e => metaCache.get((e.path, e.len)),
+      options.planningParallelism, options.gzipFor)(
+      "WARN WhisperMicroBatchStream: header content diverged from the per-stream cache " +
+        "under UNCHANGED file lengths (same-length re-layout migration); discarding the " +
+        "whole header cache and the manifest trust — this trigger re-reads fresh")
     if (!ok) {
-      System.err.println(
-        "WARN WhisperMicroBatchStream: header content diverged from the per-stream cache " +
-          "under UNCHANGED file lengths (same-length re-layout migration); discarding the " +
-          "whole header cache and the manifest trust — this trigger re-reads fresh")
       metaCache.clear()
       basePlan = null // cached units embed the diverged headers
-      WhisperManifest.invalidateVerdict(options.effectiveManifest)
+      OpCache.release(WhisperManifest.VerdictSlot, options.effectiveManifest)
     }
   }
 

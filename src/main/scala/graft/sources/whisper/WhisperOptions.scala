@@ -132,16 +132,6 @@ final case class WhisperOptions(
     // read fresh), deleted files drop, changed lengths refresh; beyond
     // it the manifest is trusted until its next refresh. 0 disables.
     manifestReconcileFiles: Int = 1000,
-    // With `manifestListing` + `streamShard`: LIST pages (of
-    // `manifestReconcileFiles` consumed entries each) the reconcile may
-    // spend per trigger. Sharded streams ROAM a persistent listing cursor
-    // across triggers (continuation-token round-robin over the directory)
-    // instead of re-listing the same prefix, so the whole directory is
-    // covered EVENTUALLY — within ceil(entries / (budget * files)) triggers
-    // — at a flat budget-pages-per-trigger cost (VERDICT r16: the r15
-    // owned-coverage fix paid up to n pages per trigger per shard, n^2
-    // LIST pages per trigger fleet-wide).
-    manifestReconcilePageBudget: Int = 1,
     // streaming only: a file whose mtime + slop precedes the micro-batch
     // window start is pruned at PLAN time (an idle file cannot hold points
     // inside the window under the tail's write-behind model, where a point's
@@ -168,8 +158,6 @@ final case class WhisperOptions(
     s"streamRevalidateTriggers must be >= 0 (0 disables), got $streamRevalidateTriggers")
   require(manifestReconcileFiles >= 0,
     s"manifestReconcileFiles must be >= 0 (0 disables), got $manifestReconcileFiles")
-  require(manifestReconcilePageBudget >= 1,
-    s"manifestReconcilePageBudget must be >= 1, got $manifestReconcilePageBudget")
   require(!manifestListing || headerManifest.nonEmpty,
     "manifestListing requires a headerManifest (the manifest IS the listing)")
   require(!manifestListing || mtimeFloorSeconds < 0,
@@ -262,8 +250,6 @@ object WhisperOptions {
     // bounded store reconcile under manifestListing (first N direct
     // entries per directory pattern; 0 = trust the manifest outright)
     manifestReconcileFiles = map.getInt("manifestReconcileFiles", 1000),
-    // LIST pages/trigger for the SHARDED roaming reconcile cursor
-    manifestReconcilePageBudget = map.getInt("manifestReconcilePageBudget", 1),
     // batch plan-time idle-file floor (epoch seconds); OPT-IN, -1 = off
     mtimeFloorSeconds = map.getLong("mtimeFloor", -1L),
     // "i/n" subtree sharding for parallel tailing of one huge tree

@@ -375,18 +375,19 @@ private[whisper] object WhisperPlanning {
       // holder's helpJoin could only steal more blocked-on-the-monitor map
       // tasks. Monitor-guarded I/O inside pool workers is the same pitfall
       // family as CHM.computeIfAbsent I/O (three r12 incidents). Eager costs
-      // two memoized manifest stats per plan (load's version check + the
-      // verdict's), paid even by a plan whose file predicates then prune
+      // one manifest stat per plan (the version both memos are stamped
+      // with), paid even by a plan whose file predicates then prune
       // everything — correctness over that sliver of laziness. The spot
       // check itself runs ONCE PER MANIFEST VERSION per JVM (ADVICE r13:
       // re-running the deterministic-per-version check on every plan — and
       // on every streaming trigger — paid k header GETs for nothing), so a
-      // steady-state plan over an unchanged manifest costs metadata stats
-      // only, zero header GETs.
-      val manifest = WhisperManifest.load(options.effectiveManifest)
-      val trusted = WhisperManifest.spotCheckCached(
-        options.effectiveManifest, manifest, candidates,
-        options.manifestSpotCheck, options.planningParallelism, options.gzipFor)
+      // steady-state plan over an unchanged manifest costs that one stat,
+      // zero header GETs.
+      val path = options.effectiveManifest
+      val version = WhisperManifest.version(path)
+      val manifest = WhisperManifest.load(path, version)
+      val trusted = WhisperManifest.spotCheck(path, manifest, candidates,
+        options.manifestSpotCheck, options.planningParallelism, options.gzipFor, version)
       (e, gz) =>
         manifest.get(e.path) match {
           case Some(entry) if entry.len == e.len && trusted => entry.meta

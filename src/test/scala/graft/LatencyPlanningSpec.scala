@@ -204,6 +204,43 @@ class LatencyPlanningSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"new manifest version must re-run the spot check, got ${SlowFs.opens.get()} opens")
   }
 
+  test("concurrent cold plans of one manifest share one parse: the manifest is opened once") {
+    // the tree stays on the plain local fs: the slow counters see manifest
+    // requests only; the session registers the slowfs scheme
+    spark.conf
+    val tree = mkTree(nDirs = 2, filesPerDir = 8)
+    val manifest = slow(Files.createTempDirectory("slow-manifest-cold").resolve("m.jsonl.gz"))
+    assert(WhisperManifest.write(Seq(tree.toString + "/*"), manifest) == 16L)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val go = new java.util.concurrent.CountDownLatch(1)
+      SlowFs.reset(20)
+      val plans = (1 to 8).map(_ => pool.submit(() => {
+        go.await()
+        spark.read.format("whisper").option("headerManifest", manifest)
+          .load(tree.toString + "/*").rdd.getNumPartitions
+      }))
+      go.countDown()
+      plans.foreach(_.get(2, java.util.concurrent.TimeUnit.MINUTES))
+      assert(SlowFs.opens.get() == 1, s"8 cold plans opened the manifest ${SlowFs.opens.get()} times")
+    } finally { pool.shutdown(); SlowFs.reset(0) }
+  }
+
+  test("a steady-state manifest plan stats the manifest once and opens nothing") {
+    spark.conf // the session registers the slowfs scheme
+    val tree = mkTree(nDirs = 2, filesPerDir = 8)
+    val manifest = slow(Files.createTempDirectory("slow-manifest-stat").resolve("m.jsonl.gz"))
+    assert(WhisperManifest.write(Seq(tree.toString + "/*"), manifest) == 16L)
+    def plan(): Int = spark.read.format("whisper").option("headerManifest", manifest)
+      .load(tree.toString + "/*").rdd.getNumPartitions
+    SlowFs.reset(0)
+    plan() // the version's parse and spot check
+    SlowFs.reset(0)
+    plan()
+    assert(SlowFs.stats.get() == 1 && SlowFs.opens.get() == 0,
+      s"steady-state plan: ${SlowFs.stats.get()} manifest stats, ${SlowFs.opens.get()} opens")
+  }
+
   test("manifest-backed stream: steady-state triggers pay ZERO header GETs at DEFAULT options (ADVICE r13)") {
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     import graft.sources.whisper.{WhisperMicroBatchStream, WhisperOffset, WhisperOptions}

@@ -18,9 +18,11 @@ import graft.operators.{MultimodalOps, OpCache}
  * memoized shared relations (BM25/quality rank tables, cluster labels) must
  * never serve a frame across sessions or dirs, must release entries for
  * stopped sessions, and must stay bounded when a live JVM cycles
- * `newSession()` (where GC-based eviction can never fire — the entry
- * strongly references its session). Every key is built exactly once, and a
- * dir-keyed entry follows a rewrite of its dir.
+ * `newSession()` (where GC-based eviction can never fire — a frame
+ * strongly references its session). Every key is built exactly once, a
+ * dir-keyed entry follows a rewrite of its dir, a changed stamp replaces
+ * its entry, and a value that does not reach its session keeps no session
+ * alive.
  *
  * One JVM holds ONE shared test SparkContext, so mid-suite tests exercise
  * the stop sweep through the registry's injectable stopped-predicate; the
@@ -150,7 +152,7 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       val calls = (1 to 8).map { _ =>
         Future {
           go.await()
-          reg.perProcess(spark, "slot", dir) {
+          reg.perProcess("slot", dir, OpCache.listing(spark, dir)) {
             builds.incrementAndGet()
             Thread.sleep(200) // hold the build open while the others arrive
             new Object
@@ -163,12 +165,14 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got.forall(_ eq got.head))
     } finally pool.shutdown()
     intercept[IllegalStateException] {
-      reg.perProcess[String](spark, "flaky", dir) { builds.incrementAndGet(); throw new IllegalStateException("boom") }
+      reg.perProcess[String]("flaky", dir, OpCache.listing(spark, dir)) {
+        builds.incrementAndGet(); throw new IllegalStateException("boom")
+      }
     }
-    assert(reg.perProcess(spark, "flaky", dir) { builds.incrementAndGet(); "ok" } == "ok",
+    assert(reg.perProcess("flaky", dir, OpCache.listing(spark, dir)) { builds.incrementAndGet(); "ok" } == "ok",
       "a failed build was cached")
     assert(builds.get == 3)
-    assert(reg.perProcess(spark, "flaky", dir)(fail("a hit ran its build"): String) == "ok")
+    assert(reg.perProcess("flaky", dir, OpCache.listing(spark, dir))(fail("a hit ran its build"): String) == "ok")
   }
 
   test("a stored fixture follows a rewrite of its corpus dir") {
@@ -209,13 +213,74 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     val reg = new OpCache()
     val tmp = java.nio.file.Files.createTempDirectory("closeable-entry")
     final class Held extends AutoCloseable { @volatile var closed = false; def close(): Unit = closed = true }
-    val first = reg.perProcess(spark, "held", tmp.toString)(new Held)
-    assert(reg.perProcess(spark, "held", tmp.toString)(fail("a hit ran its build"): Held) eq first)
+    def held(build: => Held): Held = reg.perProcess("held", tmp.toString, OpCache.listing(spark, tmp.toString))(build)
+    val first = held(new Held)
+    assert(held(fail("a hit ran its build")) eq first)
     java.nio.file.Files.write(tmp.resolve("part"), Array[Byte](1))
-    val second = reg.perProcess(spark, "held", tmp.toString)(new Held)
+    val second = held(new Held)
     assert(!(second eq first) && first.closed && !second.closed, "the stale value was kept or left open")
     reg.release("held")
     assert(second.closed, "a released value was left open")
+  }
+
+  test("a caller-supplied stamp: a changed stamp replaces the entry, no superseded version stays reachable") {
+    val reg = new OpCache()
+    final class Held extends AutoCloseable { @volatile var closed = false; def close(): Unit = closed = true }
+    // built out of line, so the test frame keeps no strong reference
+    def process(stamp: (Long, Long)): java.lang.ref.WeakReference[Held] =
+      new java.lang.ref.WeakReference(reg.perProcess("manifest", "/m.jsonl", stamp)(new Held))
+    def session(stamp: String): java.lang.ref.WeakReference[Held] =
+      new java.lang.ref.WeakReference(reg.perSession(spark, "conf", "", stamp)(new Held))
+    val versions = Seq((1L, 10L), (2L, 20L), (3L, 30L)).map(process)
+    assert(reg.perProcess("manifest", "/m.jsonl", (3L, 30L))(fail("a hit ran its build"): Held) eq versions.last.get)
+    val confs = Seq("a", "b").map(session)
+    assert(reg.perSession(spark, "conf", "", "b")(fail("a hit ran its build"): Held) eq confs.last.get)
+    val superseded = versions.init ++ confs.init
+    assert(superseded.forall(w => w.get == null || w.get.closed), "a superseded version stayed registered")
+    assert(!versions.last.get.closed && !confs.last.get.closed)
+    var rounds = 0
+    while (superseded.exists(_.get != null) && rounds < 50) { System.gc(); Thread.sleep(20); rounds += 1 }
+    assert(superseded.forall(_.get == null), "a superseded version stayed reachable")
+    assert(versions.last.get != null && confs.last.get != null, "the current version was dropped")
+    reg.release("manifest")
+    reg.release("conf")
+  }
+
+  test("an entry keeps its value, not what its build captured") {
+    val reg = new OpCache()
+    // the build captures a large input (a plan's file list) and keeps a
+    // small verdict from it
+    def memo(): java.lang.ref.WeakReference[Array[Long]] = {
+      val input = new Array[Long](1 << 16)
+      reg.perProcess("verdict", "/m.jsonl", (1L, 1L))(java.lang.Boolean.valueOf(input.length > 0))
+      new java.lang.ref.WeakReference(input)
+    }
+    val captured = memo()
+    var rounds = 0
+    while (captured.get != null && rounds < 50) { System.gc(); Thread.sleep(20); rounds += 1 }
+    val alive = captured.get != null
+    assert(!alive, "the registry kept the build's captured input alive")
+    assert(reg.perProcess[java.lang.Boolean]("verdict", "/m.jsonl", (1L, 1L))(fail("a hit ran its build")))
+    reg.release("verdict")
+  }
+
+  test("a session value that does not reach its session keeps no session alive") {
+    val reg = new OpCache()
+    // a stream's cloned session: used for one query, then dropped
+    def memo(): (java.lang.ref.WeakReference[SparkSession], java.lang.ref.WeakReference[Object]) = {
+      val s = spark.newSession()
+      val v = reg.perSession(s, "conf", "")(new Object)
+      (new java.lang.ref.WeakReference(s), new java.lang.ref.WeakReference(v))
+    }
+    def collected(w: java.lang.ref.WeakReference[_]): Boolean = {
+      var rounds = 0
+      while (w.get != null && rounds < 50) { System.gc(); Thread.sleep(20); rounds += 1 }
+      w.get == null
+    }
+    val (session, value) = memo()
+    assert(collected(session), "the registry kept a session alive through a value that does not reach it")
+    reg.perProcess("other", "", null)(new Object) // an insert sweeps the collected session's entries
+    assert(collected(value), "a collected session's value stayed registered")
   }
 
   test("REAL stop releases entries under the default predicate (runs last: stops the context)") {

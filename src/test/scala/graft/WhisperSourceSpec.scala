@@ -188,6 +188,19 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[java.io.EOFException](cutFile.meta)
   }
 
+  test("gzip metadata: a header longer than 64 KiB (6,000 archives) reads whole, decompressed size counted") {
+    val wide = dir.resolve("wide.wsp.gz")
+    val archives = (0 until 6000).map(i =>
+      ArchiveSpec(60L * (i + 1), points = 2, filled = 1, lastTimestamp = 1600000000L, rotation = 0))
+    WhisperWriter.writeFile(wide, FileSpec(archives = archives))
+    val expected = 16L + 6000L * 12 + 6000L * 2 * 12 // header + 2 points of 12 B per archive
+    for (m <- Seq(WhisperMeta.read(wide.toString), WhisperFile.read(spark, wide.toString).meta)) {
+      assert(m.archives.length == 6000)
+      assert(m.fileSizeActual == expected) // decompressed, != on-disk
+      assert(!m.fileSizeMismatch)
+    }
+  }
+
   // --- corruption (test_whisper_pandas.py:100-103) ---
 
   test("truncated file: headers parse, mismatch flagged, scan degrades cleanly") {
